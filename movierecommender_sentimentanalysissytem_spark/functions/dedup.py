@@ -104,6 +104,10 @@ _DUCK_SHINGLES_W = (
 _SPARK_BASE = f"({_spark_h('m', 's')} % {_M})"
 _DUCK_BASE = f"({_duck_h('m', 's')} % {_M})"
 
+# Distinct base-hash set of a words column ``w`` (MinHash input). Every
+# ``w`` of size >= 3 yields at least one shingle, so at least one hash.
+_SPARK_HVALS_W = f"array_distinct(transform({_SPARK_SHINGLES_W}, s -> {_SPARK_BASE}))"
+
 
 # ------------------------------------------------------------ operators
 
@@ -303,10 +307,7 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     hv = scoped_persist(
         d.select(
             "doc_id",
-            F.expr(
-                f"array_distinct(transform({_SPARK_SHINGLES_W},"
-                f" s -> {_SPARK_BASE}))"
-            ).alias("hvals"),
+            F.expr(_SPARK_HVALS_W).alias("hvals"),
         )
     )
     # Signature + band keys as TWO nested higher-order expressions
@@ -323,6 +324,11 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (a*x+b)%P lies in [0, P-1]. Measured (fresh-session interleaved
     # A/B, sf0.001): first-run 5.2-5.5 s -> 4.3-4.9 s, warm
     # 1.8-2.1 -> 1.6-1.8 s; identical plan shape otherwise.
+    # Over an EMPTY hvals the fold would return the init [P, ..., P]
+    # (array_min gave NULLs), and every such doc would share all band
+    # keys. The size(w) >= 3 filter above rules that out: each kept doc
+    # has >= 1 shingle, so a non-empty hvals
+    # (tests/test_operators.py pins this invariant).
     sig_fold = f"""
     aggregate(
       hvals,

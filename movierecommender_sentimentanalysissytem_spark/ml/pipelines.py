@@ -11,7 +11,12 @@ Scale notes: ALS is the one genuinely iterative-distributed algorithm
 in the engine — MLlib's implementation block-partitions the rating
 matrix and alternates factor solves with a shuffle per iteration;
 ``recommendForAllUsers`` is a blocked cross-product top-k. Both scale
-with executors; nothing here collects to the driver.
+with executors; nothing here collects to the driver. The block count
+follows the session's task slots (``defaultParallelism``), capped at
+MLlib's default of 10: each half-iteration runs one task per block and
+the top-k crosses user blocks × item blocks, so 10 blocks on 3 slots
+queue 100 tiny cartesian tasks where 9 do the same work. Sessions with
+10 or more slots fit exactly MLlib's default model.
 """
 
 from __future__ import annotations
@@ -92,6 +97,28 @@ def _ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def als_estimator(spark: SparkSession):
+    """The engine's one ALS configuration: rank 8, 5 iterations, fixed
+    seed, on the ``_ratings`` columns, with user and item blocks sized
+    to the session (see the module's scale notes). ALS seeds its initial
+    factors per block, so the fitted model depends on the block count."""
+    from pyspark.ml.recommendation import ALS
+
+    blocks = min(10, spark.sparkContext.defaultParallelism)
+    return ALS(
+        rank=8,
+        maxIter=5,
+        regParam=0.1,
+        seed=42,
+        userCol="user",
+        itemCol="item",
+        ratingCol="rating",
+        coldStartStrategy="drop",
+        numUserBlocks=blocks,
+        numItemBlocks=blocks,
+    )
+
+
 @query("ml_sentiment_pipeline")
 def ml_sentiment_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer → unigram+bigram HashingTF → IDF → LogisticRegression
@@ -147,22 +174,10 @@ def ml_als_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
     recommendations per user (the archetype's headline workflow).
 
     rows-checked: (user, rec_rank, item) — 5 rows per user with
-    factors seeded for run-to-run determinism.
+    factors seeded for run-to-run determinism at a given task-slot
+    count (``als_estimator`` sizes the blocks to the session).
     """
-    from pyspark.ml.recommendation import ALS
-
-    ratings = _ratings(spark, sf_dir)
-    als = ALS(
-        rank=8,
-        maxIter=5,
-        regParam=0.1,
-        seed=42,
-        userCol="user",
-        itemCol="item",
-        ratingCol="rating",
-        coldStartStrategy="drop",
-    )
-    model = als.fit(ratings)
+    model = als_estimator(spark).fit(_ratings(spark, sf_dir))
     recs = model.recommendForAllUsers(5)
     return recs.select(
         "user",

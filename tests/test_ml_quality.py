@@ -30,19 +30,24 @@ def test_als_model_rmse_reasonable(spark):
     exactly what a broken factorization collapses to), strengthened
     from the global-mean floor per the r13 verdict. Baseline ladder
     measured round 14 at SF_SMALL: global-mean 14.165, per-user-mean
-    13.992, per-item-mean 13.864, ALS 8.610 — a 38% margin, so the
-    stronger floor carries no flake risk. Catches broken wiring,
+    13.992, per-item-mean 13.864, ALS 8.610 at 10 blocks (8.348 at
+    the suite's 8) — a 38-40% margin, so the stronger floor carries no
+    flake risk. Catches broken wiring,
     seeds, or degenerate convergence that the global-mean bar would
-    let through."""
-    from pyspark.ml.recommendation import ALS
+    let through. The model is the one ml_als_recommend serves
+    (ml.pipelines.als_estimator), blocked to the session's task slots."""
     from pyspark.sql.window import Window
 
-    from movierecommender_sentimentanalysissytem_spark.ml.pipelines import _ratings
+    from movierecommender_sentimentanalysissytem_spark.ml.pipelines import (
+        _ratings,
+        als_estimator,
+    )
 
     ratings = _ratings(spark, SF_SMALL)
-    als = ALS(rank=8, maxIter=5, regParam=0.1, seed=42, userCol="user",
-              itemCol="item", ratingCol="rating", coldStartStrategy="drop")
-    pred = als.fit(ratings).transform(ratings)
+    model = als_estimator(spark).fit(ratings)
+    blocks = min(10, spark.sparkContext.defaultParallelism)
+    assert model.userFactors.rdd.getNumPartitions() == blocks
+    pred = model.transform(ratings)
     err = pred.select(
         F.pow(F.col("rating") - F.col("prediction"), 2).alias("se"),
         F.pow(

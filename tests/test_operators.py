@@ -83,6 +83,42 @@ def test_exceptall_bag_semantics(spark):
     assert out == [1, 2]  # bag difference keeps one of the duplicate 1s
 
 
+def test_minhash_hvals_nonempty_for_every_kept_doc(spark):
+    """dedup_near_minhash folds each doc's hvals with aggregate() from
+    an all-P init, so an EMPTY hvals would give the sentinel signature
+    [P, ..., P] and every such doc would share all band keys. The
+    size(w) >= 3 filter rules that out: n >= 3 words give n - 2 >= 1
+    shingles. Pinned on edge texts (exactly three tokens, empty tokens
+    from repeated, leading or trailing spaces) and on the fixture
+    corpus."""
+    from movierecommender_sentimentanalysissytem_spark.functions.dedup import (
+        _SPARK_HVALS_W,
+    )
+    from movierecommender_sentimentanalysissytem_spark.sources.tables import table
+
+    def hval_sizes(docs):
+        return (
+            docs.withColumn("w", F.split("text", " "))
+            .filter(F.size("w") >= 3)
+            .select("text", F.size(F.expr(_SPARK_HVALS_W)).alias("n"))
+        )
+
+    edge = spark.createDataFrame(
+        [("a b c",), ("a a a",), ("   ",), ("  x",), ("x  ",), ("a  b",),
+         ("a b c d e f g h",), ("a b",)],
+        "text string",
+    )
+    # "a b" is dropped by the filter; "a a a" has one distinct shingle
+    assert {r.text: r.n for r in hval_sizes(edge).collect()} == {
+        "a b c": 1, "a a a": 1, "   ": 1, "  x": 1, "x  ": 1, "a  b": 1,
+        "a b c d e f g h": 6,
+    }
+    lo, kept = hval_sizes(table(spark, SF_SMALL, "documents")).agg(
+        F.min("n"), F.count("*")
+    ).collect()[0]
+    assert kept > 0 and lo >= 1, (lo, kept)
+
+
 def test_dedup_exact_idempotent(spark):
     once = QS["dedup_exact"](spark, SF_SMALL)
     n = once.count()
