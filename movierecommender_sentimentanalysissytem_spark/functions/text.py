@@ -21,7 +21,10 @@ from pyspark.sql.window import Window
 
 from movierecommender_sentimentanalysissytem_spark.functions.rounding import round4
 from movierecommender_sentimentanalysissytem_spark.registry import query
-from movierecommender_sentimentanalysissytem_spark.sources.tables import table
+from movierecommender_sentimentanalysissytem_spark.sources.tables import (
+    literal_table,
+    table,
+)
 
 # Explicit literal stopword list (FIXTURES.md: never StopWordsRemover
 # defaults — the oracle must see the identical list).
@@ -52,7 +55,7 @@ def _words(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lexicon_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(list(LEXICON), ["word", "score"])
+    return literal_table(spark, LEXICON, "word string, score bigint")
 
 
 _LEXICON_SQL = "(VALUES " + ", ".join(
@@ -259,14 +262,19 @@ def text_lexicon_sentiment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AFINN-style lexicon sentiment: join tokens to an inline integer
     word→score table, sum/average per document. Integer scores make the
     per-doc aggregate exact (no float-order drift). The lexicon is a
-    broadcast literal — zero shuffle added to the token stream."""
+    broadcast literal — zero shuffle added to the token stream — built
+    as a JVM local relation (``literal_table``): ``createDataFrame`` on
+    a Python list would parallelize it through a Python-worker RDD and
+    bill seconds of executor time per run for 10 rows. ``doc_id`` is
+    unique, so grouping on ``(doc_id, lang)`` equals the oracle's
+    ``ANY_VALUE(lang)`` and stays a hash aggregate (``any_value`` over
+    a string forces a sort-based one)."""
     tokens = _words(spark, sf_dir).select("doc_id", "lang", "word")
     lex = _lexicon_df(spark)
     return (
         tokens.join(F.broadcast(lex), "word")
-        .groupBy("doc_id")
+        .groupBy("doc_id", "lang")
         .agg(
-            F.any_value("lang").alias("lang"),
             F.sum("score").alias("sent_sum"),
             round4(F.sum("score").cast("double") / F.count(F.lit(1))).alias(
                 "sent_avg"

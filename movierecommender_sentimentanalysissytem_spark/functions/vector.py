@@ -23,7 +23,11 @@ from pyspark.sql.window import Window
 
 from movierecommender_sentimentanalysissytem_spark.functions.rounding import round4
 from movierecommender_sentimentanalysissytem_spark.registry import query
-from movierecommender_sentimentanalysissytem_spark.sources.tables import EMBEDDING_DIM, table
+from movierecommender_sentimentanalysissytem_spark.sources.tables import (
+    EMBEDDING_DIM,
+    literal_table,
+    table,
+)
 
 # DuckDB index range covering the embedding dimensionality (1-based,
 # inclusive-exclusive) — derived from the shared constant so the oracle
@@ -998,7 +1002,7 @@ def sim_matmul_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out_schema = "query_id long, neighbor_id long, cos_sim double"
     if not qrows:  # empty corpus/query block: empty result, same schema
-        return spark.createDataFrame([], out_schema + ", rn int")
+        return literal_table(spark, [], out_schema + ", rn int")
     qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
     qmat = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in qrows])
     qunit = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)

@@ -13,7 +13,10 @@ from pyspark.sql.window import Window
 from movierecommender_sentimentanalysissytem_spark.functions.rounding import round4
 from movierecommender_sentimentanalysissytem_spark.plans.caching import scoped_persist
 from movierecommender_sentimentanalysissytem_spark.registry import query
-from movierecommender_sentimentanalysissytem_spark.sources.tables import table
+from movierecommender_sentimentanalysissytem_spark.sources.tables import (
+    literal_table,
+    table,
+)
 
 
 @query(
@@ -423,7 +426,8 @@ def observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     observed.write.format("noop").mode("overwrite").save()  # the "job"
     m = obs.get
-    return spark.createDataFrame(
+    return literal_table(
+        spark,
         [(m["n_rows"], m["n_nonpositive"], m["max_key"])],
         "n_rows bigint, n_nonpositive bigint, max_key bigint",
     )

@@ -23,7 +23,10 @@ from pyspark.sql.window import Window
 
 from movierecommender_sentimentanalysissytem_spark.functions.rounding import round4
 from movierecommender_sentimentanalysissytem_spark.registry import query
-from movierecommender_sentimentanalysissytem_spark.sources.tables import table
+from movierecommender_sentimentanalysissytem_spark.sources.tables import (
+    literal_table,
+    table,
+)
 
 
 @query(
@@ -1261,7 +1264,8 @@ def geo_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
         poly_rows.append(
             (pid, [{"px": px, "py": py} for px, py in verts], x0, x1, y0, y1)
         )
-    polys = spark.createDataFrame(
+    polys = literal_table(
+        spark,
         poly_rows,
         "polygon_id int, vs array<struct<px: double, py: double>>, "
         "bx0 double, bx1 double, by0 double, by1 double",

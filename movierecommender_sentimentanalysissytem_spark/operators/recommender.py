@@ -209,7 +209,9 @@ def rec_user_topn_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sentiment_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The archetype's headline sentiment report: per-language
     positive/negative/neutral document counts from the lexicon scores
-    (the classifier's output distribution, relationally)."""
+    (the classifier's output distribution, relationally). Per-doc
+    scoring is ``text_lexicon_sentiment``'s: ``(doc_id, lang)`` hash
+    grouping, ``doc_id`` being unique."""
     from movierecommender_sentimentanalysissytem_spark.functions.text import (
         _lexicon_df,
         _words,
@@ -218,11 +220,8 @@ def sentiment_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens = _words(spark, sf_dir).select("doc_id", "lang", "word")
     scored = (
         tokens.join(F.broadcast(_lexicon_df(spark)), "word")
-        .groupBy("doc_id")
-        .agg(
-            F.any_value("lang").alias("lang"),
-            F.sum("score").alias("sent_sum"),
-        )
+        .groupBy("doc_id", "lang")
+        .agg(F.sum("score").alias("sent_sum"))
     )
     return (
         scored.withColumn(

@@ -15,7 +15,10 @@ from pyspark.sql import functions as F
 
 from movierecommender_sentimentanalysissytem_spark.functions.rounding import round4
 from movierecommender_sentimentanalysissytem_spark.registry import query
-from movierecommender_sentimentanalysissytem_spark.sources.tables import table
+from movierecommender_sentimentanalysissytem_spark.sources.tables import (
+    literal_table,
+    table,
+)
 
 
 @query(
@@ -442,15 +445,22 @@ def join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     into a read of one partition directory — the run-time complement
     to static partition pruning (sink_partitioned_parquet). The
     written layout is a temp copy of the fixture (the fixture itself
-    is read-only single-file parquet)."""
+    is read-only single-file parquet). The 3-row dimension is written
+    beside it: DPP needs a filter on the dimension side of the optimized
+    plan, and a filter over a literal relation is folded into the
+    relation itself."""
     li = table(spark, sf_dir, "lineitem")
-    out = os.path.join(mkscratch("mrsas_dpp_"), "li_by_flag")
+    scratch = mkscratch("mrsas_dpp_")
+    out = os.path.join(scratch, "li_by_flag")
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
     fact = spark.read.parquet(out)
-    flags = spark.createDataFrame(
+    dim = os.path.join(scratch, "flags")
+    literal_table(
+        spark,
         [("A", "closed"), ("N", "open"), ("R", "returned")],
         "flag string, label string",
-    )
+    ).write.mode("overwrite").parquet(dim)
+    flags = spark.read.parquet(dim)
     return (
         fact.join(flags, fact.l_returnflag == flags.flag)
         .filter(F.col("label") == "returned")

@@ -7,6 +7,8 @@ Flags:
   only when one side is provably tiny)
 - single-partition Exchange (global sort/window without partitioning)
   that is not a final top-k/limit
+- Python execution node (rows shipped to a Python worker) not on the
+  reviewed allowlist
 
 CLI: ``python scripts/plan_audit.py [sf_dir]`` (thin wrapper).
 """
@@ -126,6 +128,62 @@ NLJ_OK = {
 }
 
 
+# Physical nodes that run Python: each ships rows to a Python worker
+# and back, the cost a JVM-only plan never pays.
+PYTHON_NODES = frozenset({
+    "BatchEvalPython",
+    "BatchEvalPythonUDTF",
+    "ArrowEvalPython",
+    "ArrowEvalPythonUDTF",
+    "ArrowAggregatePython",
+    "ArrowWindowPython",
+    "MapInPandas",
+    "MapInArrow",
+    "FlatMapGroupsInPandas",
+    "FlatMapGroupsInArrow",
+    "FlatMapCoGroupsInPandas",
+    "FlatMapCoGroupsInArrow",
+})
+
+# Queries whose point is Python execution (UDF/UDTF/pandas keys, the
+# multimodal kernels, the NumPy GEMM). Any other key gaining a Python
+# node is flagged: a quiet Python hop is a per-row serialization cost.
+PYTHON_OK = {
+    "udf_python_scalar",      # BatchEvalPython: the row-at-a-time baseline
+    "udf_arrow_optimized",    # ArrowEvalPython
+    "udf_pandas_vectorized",  # ArrowEvalPython
+    "udf_pandas_iter",        # ArrowEvalPython (iterator of batches)
+    "udf_map_in_arrow",       # MapInArrow
+    "udf_cogrouped_map",      # FlatMapCoGroupsInPandas
+    "udaf_pandas_grouped",    # FlatMapGroupsInPandas
+    "udtf",                   # BatchEvalPythonUDTF
+    "udtf_table_argument",    # BatchEvalPythonUDTF
+    "multimodal_decode_image",     # MapInPandas decoders/extractors over
+    "multimodal_decode_audio",     # binary payloads
+    "multimodal_frame_sample",
+    "multimodal_feature_extract",
+    "sim_matmul_topk",        # MapInPandas NumPy GEMM per batch
+}
+
+
+def _tree_nodes(plan: str) -> list[tuple[int, str, str]]:
+    """``(indent, name, id)`` of every node line in the tree section of
+    an ``explain("formatted")`` dump."""
+    import re
+
+    lines = []
+    for raw in plan.partition("\n\n")[0].splitlines():
+        m = re.match(r"^([:+\-| ]*)\*?\(?\d*\)?\s*(\w[\w .]*) \((\d+)\)", raw)
+        if m:
+            lines.append((len(m.group(1)), m.group(2).strip(), m.group(3)))
+    return lines
+
+
+def python_nodes(plan: str) -> list[str]:
+    """Names of the Python execution nodes in a formatted plan."""
+    return [name for _, name, _ in _tree_nodes(plan) if name in PYTHON_NODES]
+
+
 def _single_partition_consumers(plan: str) -> list[str]:
     """Names of the plan nodes that directly consume a SinglePartition
     Exchange, from ``explain("formatted")`` output: the detail blocks
@@ -133,7 +191,7 @@ def _single_partition_consumers(plan: str) -> list[str]:
     gives each id's consumer (nearest shallower line above)."""
     import re
 
-    tree, _, details = plan.partition("\n\n")
+    details = plan.partition("\n\n")[2]
     sp_ids = {
         m.group(1)
         for m in re.finditer(
@@ -142,11 +200,7 @@ def _single_partition_consumers(plan: str) -> list[str]:
             re.S,
         )
     }
-    lines = []
-    for raw in tree.splitlines():
-        m = re.match(r"^([:+\-| ]*)\*?\(?\d*\)?\s*(\w[\w .]*) \((\d+)\)", raw)
-        if m:
-            lines.append((len(m.group(1)), m.group(2).strip(), m.group(3)))
+    lines = _tree_nodes(plan)
     consumers = []
     for i, (indent, _name, nid) in enumerate(lines):
         if nid in sp_ids:
@@ -195,6 +249,9 @@ def audit_plans(spark: SparkSession, sf_dir: str) -> list[str]:
                         f"SinglePartition exchange into {consumer}"
                     )
                     break
+        py = python_nodes(plan)
+        if py and key not in PYTHON_OK:
+            flags.append(f"Python execution node {py[0]} (unreviewed)")
         if flags:
             flags_out.append(f"{key}: {', '.join(flags)}")
     return flags_out

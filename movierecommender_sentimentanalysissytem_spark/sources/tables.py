@@ -120,6 +120,38 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _read_parquet(spark, path)
 
 
+def literal_table(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A constant relation built in the JVM: ``rows`` (tuples in column
+    order; nested structs as dicts) under exactly the schema ``ddl``
+    declares, nullability included.
+
+    Every constant table in the package goes through here, never through
+    ``spark.createDataFrame(list)``. That call becomes ``sc.parallelize``
+    plus an identity re-pickling ``map`` (a PythonRDD), so each execution
+    of the query launches one task per ``defaultParallelism`` slice that
+    waits on a Python worker — for a 10-row lexicon, seconds of executor
+    time. A ``pyarrow.Table`` instead becomes a ``LocalRelation``, which
+    Spark plans as ``LocalTableScan`` (no RDD, no Python worker) as long
+    as the Arrow data is under
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+    default); above it Spark parallelizes the Arrow batches as an RDD,
+    so this is for small literal tables. Empty ``rows`` give an empty
+    relation with the same schema.
+
+    ``pyarrow`` is imported here, not at module level, so importing the
+    registry does not pay for it.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = StructType.fromDDL(ddl)
+    names = schema.fieldNames()
+    data = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(data)
+
+
 def load_tables(
     spark: SparkSession, sf_dir: str, register_views: bool = True
 ) -> dict[str, DataFrame]:

@@ -36,7 +36,10 @@ from pyspark.sql.window import Window
 
 from movierecommender_sentimentanalysissytem_spark.functions.rounding import round4
 from movierecommender_sentimentanalysissytem_spark.registry import query
-from movierecommender_sentimentanalysissytem_spark.sources.tables import table
+from movierecommender_sentimentanalysissytem_spark.sources.tables import (
+    literal_table,
+    table,
+)
 
 _BUCKET_FMT = "yyyy-MM-dd HH:mm:ss"
 
@@ -775,14 +778,16 @@ def stream_observe_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_ep = m["min_epoch"] if min_ep is None else min(min_ep, m["min_epoch"])
         max_ep = m["max_epoch"] if max_ep is None else max(max_ep, m["max_epoch"])
     if min_ep is None:
-        return spark.createDataFrame(
+        return literal_table(
+            spark,
             [],
             "n_rows bigint, n_views bigint, value_cents bigint,"
             " min_ts string, max_ts string, rows_per_event_sec double",
         )
     rate = n_rows / max(1.0, float(max_ep - min_ep))
     fmt = "%Y-%m-%d %H:%M:%S"
-    return spark.createDataFrame(
+    return literal_table(
+        spark,
         [
             (
                 n_rows,

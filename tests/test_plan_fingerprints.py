@@ -187,3 +187,180 @@ Output: [a]
         "InMemoryTableScan": 2,  # two genuine references
         "Scan parquet": 1,  # inside the cache, built once
     }
+
+
+def test_fingerprint_counts_longest_prefix():
+    """``SortAggregate`` is not a ``Sort`` and ``WindowGroupLimit`` is
+    not a ``Window``: each name counts under its longest prefix."""
+    from movierecommender_sentimentanalysissytem_spark.plans.fingerprint import (
+        fingerprint,
+    )
+
+    plan = """== Physical Plan ==
+AdaptiveSparkPlan (9)
++- SortAggregate (8)
+   +- Sort (7)
+      +- Window (6)
+         +- WindowGroupLimit (5)
+            +- Sort (4)
+               +- Exchange (3)
+                  +- SortMergeJoin LeftOuter (2)
+                     +- Scan parquet  (1)
+"""
+    assert fingerprint(plan) == {
+        "SortAggregate": 1,
+        "Sort": 2,
+        "Window": 1,
+        "WindowGroupLimit": 1,
+        "Exchange": 1,
+        "SortMergeJoin": 1,
+        "Scan parquet": 1,
+    }
+
+
+def test_fingerprint_scopes_id_dedup_to_each_plan_section():
+    """Ids are deduplicated within one printed section only: two
+    different caches whose inner plans reuse the same ids (or reuse an
+    outer-tree id) are all counted, while a repeated printing of one
+    cache's inner plan is still counted once."""
+    from movierecommender_sentimentanalysissytem_spark.plans.fingerprint import (
+        fingerprint,
+    )
+
+    plan = """== Physical Plan ==
+AdaptiveSparkPlan (9)
++- SortMergeJoin Inner (8)
+   :- InMemoryTableScan (1)
+   :     +- InMemoryRelation (2)
+   :           +- HashAggregate (3)
+   :              +- Exchange (2)
+   :                 +- Scan parquet  (1)
+   :- InMemoryTableScan (4)
+   :     +- InMemoryRelation (5)
+   :           +- HashAggregate (3)
+   :              +- Exchange (2)
+   :                 +- Scan parquet  (1)
+   +- InMemoryTableScan (6)
+         +- InMemoryRelation (7)
+               +- Sort (3)
+                  +- Exchange (2)
+                     +- Scan parquet  (1)
+"""
+    assert fingerprint(plan) == {
+        "SortMergeJoin": 1,
+        "InMemoryTableScan": 3,
+        "HashAggregate": 1,  # one cache, printed twice
+        "Sort": 1,  # a second cache reusing ids (3), (2), (1)
+        "Exchange": 2,
+        "Scan parquet": 2,
+    }
+
+
+def test_fingerprint_walks_a_cache_nested_in_a_cache():
+    """A cache built on another cache prints the inner cache's
+    Final/Initial sections at columns that ignore the enclosing
+    indentation (here 21, shallower than the outer relation's 39), and
+    the outer plan then resumes where a child of the inner Initial
+    plan's last leaf would sit (BroadcastQueryStage (15) under
+    ``Scan parquet (5)``). The walk must count the inner cache's final
+    plan once, skip both Initial plans, and give the BroadcastQueryStage
+    subtree back to its real parent, the BroadcastHashJoin."""
+    from movierecommender_sentimentanalysissytem_spark.plans.fingerprint import (
+        fingerprint,
+    )
+
+    plan = """== Physical Plan ==
+AdaptiveSparkPlan (20)
++- HashAggregate (19)
+   +- InMemoryTableScan (1)
+         +- InMemoryRelation (2)
+               +- AdaptiveSparkPlan (18)
+                  +- == Final Plan ==
+                     ResultQueryStage (17)
+                     +- * BroadcastHashJoin Inner BuildRight (16)
+                        :- InMemoryTableScan (3)
+                        :     +- InMemoryRelation (4)
+                        :           +- AdaptiveSparkPlan (9)
+                  +- == Final Plan ==
+                     ResultQueryStage (7)
+                     +- Exchange (6)
+                        +- * Scan parquet  (5)
+                  +- == Initial Plan ==
+                     Exchange (8)
+                     +- Scan parquet  (5)
+                        +- BroadcastQueryStage (15)
+                           +- BroadcastExchange (14)
+                              +- * Scan parquet  (13)
+                  +- == Initial Plan ==
+                     BroadcastHashJoin Inner BuildRight (12)
+                     :- Scan parquet  (10)
+                     +- BroadcastExchange (11)
+                        +- Scan parquet  (13)
+
+(1) InMemoryTableScan
+Output: [a]
+"""
+    assert fingerprint(plan) == {
+        "HashAggregate": 1,
+        "InMemoryTableScan": 2,
+        "BroadcastHashJoin": 1,
+        "Exchange": 1,  # (6); (8) is an Initial plan's
+        "Scan parquet": 2,  # (5) and (13)
+        "BroadcastExchange": 1,
+    }
+
+
+def _object_counts(spark, plan) -> dict[str, int]:
+    """Ground truth for ``fingerprint``: walk the physical plan OBJECTS
+    (through adaptive plans, query stages and cached plans), count each
+    object once by identity, and name it as the fingerprint would."""
+    from movierecommender_sentimentanalysissytem_spark.plans.fingerprint import (
+        _counted,
+    )
+
+    ident = spark._jvm.java.lang.System.identityHashCode
+    seen: set[int] = set()
+    counts: dict[str, int] = {}
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        if ident(node) in seen:
+            continue
+        seen.add(ident(node))
+        cls = node.getClass().getSimpleName()
+        name = node.nodeName()
+        prefix = _counted("Scan parquet" if name.startswith("Scan parquet") else name)
+        if prefix is not None and cls not in ("WholeStageCodegenExec", "InputAdapter"):
+            counts[prefix] = counts.get(prefix, 0) + 1
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        elif cls == "InMemoryTableScanExec":
+            stack.append(node.relation().cachedPlan())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return counts
+
+
+@pytest.mark.parametrize(
+    "key", ["rec_association_rules", "rec_multihop_expansion", "graph_triangle_count"]
+)
+def test_fingerprint_matches_the_physical_plan_objects(spark, key):
+    """Caches nested in caches are where the printed tree is hardest to
+    read; there the text fingerprint must equal a count over the plan
+    objects themselves."""
+    import contextlib
+    import io
+
+    from movierecommender_sentimentanalysissytem_spark import registry
+    from movierecommender_sentimentanalysissytem_spark.plans.fingerprint import (
+        fingerprint,
+    )
+
+    df = registry.queries()[key](spark, SF_SMALL)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    truth = _object_counts(spark, df._jdf.queryExecution().executedPlan())
+    assert fingerprint(buf.getvalue()) == truth

@@ -399,3 +399,52 @@ def test_shuffle_hash_hint_is_honored(spark):
     plan = _plan(spark, "join_hint_shuffle_hash")
     assert "ShuffledHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+# Keys whose constant relations (lexicon, flag table, polygon fence,
+# observed-metric rows) come from ``sources.tables.literal_table``.
+# (dedup_clusters' ExistingRDD comes from ``localCheckpoint``, a
+# JVM-only RDD, and is not a literal table.)
+LITERAL_TABLE_KEYS = [
+    "text_lexicon_sentiment",
+    "sentiment_distribution",
+    "join_dynamic_partition_pruning",
+    "geo_point_in_polygon",
+    "observe_metrics",
+    "stream_observe_rate",
+]
+
+
+@pytest.mark.parametrize("key", LITERAL_TABLE_KEYS)
+def test_literal_tables_plan_as_local_scans(spark, key):
+    """A constant relation built from a Python list plans as
+    ``Scan ExistingRDD`` over a Python-worker RDD; built in the JVM it
+    is a ``LocalTableScan`` (or is folded away entirely)."""
+    assert "ExistingRDD" not in _plan(spark, key)
+
+
+def test_python_node_rule_on_synthetic_and_live_plans(spark):
+    """The audit's Python-execution rule must find the worker nodes by
+    exact name, and every allowlisted key must exist."""
+    from movierecommender_sentimentanalysissytem_spark.plans.audit import (
+        PYTHON_OK,
+        python_nodes,
+    )
+
+    plan = """== Physical Plan ==
+AdaptiveSparkPlan (6)
++- Project (5)
+   +- BatchEvalPythonUDTF (4)
+      +- ArrowEvalPython (3)
+         +- MapInPandas (2)
+            +- Scan parquet  (1)
+
+(4) BatchEvalPythonUDTF
+Arguments: [MapInPandas]
+"""
+    assert python_nodes(plan) == [
+        "BatchEvalPythonUDTF", "ArrowEvalPython", "MapInPandas"
+    ]
+    assert not PYTHON_OK - set(QS)
+    assert python_nodes(_plan(spark, "udf_python_scalar")) == ["BatchEvalPython"]
+    assert python_nodes(_plan(spark, "text_lexicon_sentiment")) == []
