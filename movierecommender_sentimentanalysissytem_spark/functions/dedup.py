@@ -197,63 +197,55 @@ def _minhash_oracle() -> str:
 # SQL oracle's plain all-pairs formulation stays bit-identical.
 LSH_BUCKET_CAP = 64
 
-_ALL_PAIRS = """
-    flatten(transform(sequence(1, size(ids) - 1),
-        i -> transform(slice(ids, i + 1, size(ids) - i),
-            x -> named_struct('doc_a', element_at(ids, i), 'doc_b', x))))
-"""
-
 def _lsh_candidate_pairs(bands: DataFrame, cap: int = LSH_BUCKET_CAP) -> DataFrame:
     """Candidate pairs from band buckets with BOUNDED per-group state.
 
     Input contract: ``bands`` rows are unique per (doc_id, band_id,
     band_key). The signature explode upstream guarantees this (one row
-    per doc per band); the hub/star branch RELIES on it — it excludes
-    rows whose doc_id equals the hub, so a duplicated hub row would be
-    silently dropped where the naive collect_list form would emit a
-    (hub, hub) self-pair. The equivalence test pins both the unique
-    and the duplicated-row behavior.
+    per doc per band). Pairs are emitted per row and a row never pairs
+    with its own doc_id, so a duplicated row contributes no (d, d)
+    self-pair where the naive collect_list form would emit one; its
+    other pairs repeat as in the naive form. The equivalence test pins
+    both the unique and the duplicated-row behavior.
 
-    Bucket stats (count + min doc_id) are aggregated first; then:
+    Every member row is annotated over its band-key partition with the
+    bucket size ``n`` and hub (min doc_id), then emits its own pairs:
 
-    - buckets within ``cap``: members are collected and expanded to all
-      pairs JVM-side — the collected array is provably ≤ ``cap`` long,
-      so aggregation state is bounded no matter how degenerate the
-      corpus;
-    - oversized buckets: each member row joins the bucket hub (the min
-      doc_id) and emits ONE star pair directly — no member array ever
-      materializes, so a pathological bucket (billions of boilerplate
-      near-identical docs collapsing into one band key) streams through
-      as ordinary rows instead of building a single giant
-      ``collect_list`` group (the OOM cliff of the naive form).
+    - buckets within ``cap``: the row also carries the bucket's members
+      (a window ``collect_list`` of the ids of buckets with n ≤ cap, so
+      the array is provably ≤ ``cap`` long no matter how degenerate the
+      corpus) and pairs itself with every larger id — all pairs, each
+      once;
+    - oversized buckets: the member array is empty and each non-hub
+      row emits ONE star pair (hub, doc_id) — a pathological bucket
+      (billions of boilerplate near-identical docs collapsing into one
+      band key) streams through as ordinary rows instead of building a
+      single giant ``collect_list`` group (the OOM cliff of the naive
+      form).
 
-    All branches hash-partition on the band key, so the physical plan
-    keeps ONE full-data shuffle with the stats/join/collect exchanges
-    reused. Cross-band duplicate pairs remain; callers dedupe on
-    (doc_a, doc_b)."""
-    keys = ["band_id", "band_key"]
-    # Bucket size + hub as window functions over the band-key partition:
-    # O(1) aggregation state inside a spilling operator (vs building the
-    # bucket array in agg state), no stats join, ONE full-data shuffle.
-    # The linear annotated-members frame is cached so the small/large
-    # branches don't recompute the shuffle.
-    w = Window.partitionBy(*keys)
-    m = scoped_persist(
+    Both windows share one band-key partitioning and ordering, so the
+    plan has ONE full-data shuffle and a single consumer of it (a
+    small/large union over the annotated frame planned the exchange
+    twice: AQE does not reuse an exchange over a cached scan).
+    Cross-band duplicate pairs remain; callers dedupe on (doc_a, doc_b)."""
+    w = Window.partitionBy("band_id", "band_key")
+    m = (
         bands.withColumn("n", F.count(F.lit(1)).over(w))
         .withColumn("hub", F.min("doc_id").over(w))
         .filter(F.col("n") >= 2)
+        .withColumn(
+            "ids", F.collect_list(F.when(F.col("n") <= cap, F.col("doc_id"))).over(w)
+        )
     )
-    small = (
-        m.filter(F.col("n") <= cap)
-        .groupBy(*keys)
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .select(F.explode(F.expr(_ALL_PAIRS)).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-    )
-    large = m.filter((F.col("n") > cap) & (F.col("doc_id") != F.col("hub"))).select(
-        F.col("hub").alias("doc_a"), F.col("doc_id").alias("doc_b")
-    )
-    return small.unionByName(large)
+    pairs = f"""
+    CASE WHEN n <= {cap}
+      THEN transform(filter(ids, x -> x > doc_id),
+                     x -> named_struct('doc_a', doc_id, 'doc_b', x))
+      ELSE filter(array(named_struct('doc_a', hub, 'doc_b', doc_id)),
+                  p -> p.doc_a != p.doc_b)
+    END
+    """
+    return m.select(F.explode(F.expr(pairs)).alias("p")).select("p.doc_a", "p.doc_b")
 
 
 @query("dedup_near_minhash", oracle=_minhash_oracle())

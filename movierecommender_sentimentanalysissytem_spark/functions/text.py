@@ -211,23 +211,27 @@ def text_doclen_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Analytic TF-IDF (raw tf × ln(N/df)) via joins — the exact,
+    """Analytic TF-IDF (raw tf × ln(N/df)) over one explode — the exact,
     SQL-checkable form of the archetype's HashingTF+IDF stage (the
     MLlib estimator variant is ml_sentiment_pipeline).
 
-    The df table is word-keyed and tiny after aggregation → broadcast
-    to the tf side; N is a scalar literal join (cross of a 1-row agg).
+    df is a word-partitioned window count over tf; N is a scalar
+    literal join (broadcast cross of a 1-row agg).
     """
     tokens = _words(spark, sf_dir).select("doc_id", "word")
-    tf = tokens.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
-    # (doc_id, word) is distinct in tf, so df is a plain count over tf —
-    # this derives df WITHOUT a second explode of the corpus, and the
-    # shared hash-exchange on (doc_id, word) is reused across branches.
-    df = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
+    # (doc_id, word) is distinct in tf, so df is a count of tf rows per
+    # word. Taking it as a window over tf, BEFORE the tf >= 3 filter,
+    # keeps one explode and one (doc_id, word) exchange. A separate
+    # tf.groupBy("word") branch does not share them: the optimizer prunes
+    # tf's count on that side, so its (doc_id, word) exchange no longer
+    # matches the tf side's and the corpus is scanned and exploded twice
+    # (7 jobs against 5).
+    tf = tokens.groupBy("doc_id", "word").agg(
+        F.count(F.lit(1)).alias("tf")
+    ).withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("word")))
     n = table(spark, sf_dir, "documents").agg(F.count(F.lit(1)).alias("n_docs"))
     return (
         tf.filter(F.col("tf") >= 3)
-        .join(F.broadcast(df), "word")
         .crossJoin(F.broadcast(n))
         .select(
             "doc_id",

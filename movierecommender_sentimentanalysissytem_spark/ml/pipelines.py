@@ -11,12 +11,33 @@ Scale notes: ALS is the one genuinely iterative-distributed algorithm
 in the engine — MLlib's implementation block-partitions the rating
 matrix and alternates factor solves with a shuffle per iteration;
 ``recommendForAllUsers`` is a blocked cross-product top-k. Both scale
-with executors; nothing here collects to the driver. The block count
-follows the session's task slots (``defaultParallelism``), capped at
-MLlib's default of 10: each half-iteration runs one task per block and
-the top-k crosses user blocks × item blocks, so 10 blocks on 3 slots
-queue 100 tiny cartesian tasks where 9 do the same work. Sessions with
-10 or more slots fit exactly MLlib's default model.
+with executors; nothing here collects to the driver.
+
+Block count: ``min(10, defaultParallelism, read splits of lineitem)``
+(``als_estimator``). Each half-iteration runs one task per block and the
+top-k runs user blocks × item blocks, so blocks only pay while there is
+data to spread over them. The split count is Spark's own sizing of the
+ratings' input (file bytes, ``maxPartitionBytes``, the open-cost floor),
+read from the planned scan without a job: 1 at sf0.001 and sf0.01 (one
+~1 MB lineitem file), 3 at sf0.1 (16 MB splits or the default 128 MB
+ones). An input that reads as at least as many splits as the session has
+slots gets ``min(10, slots)`` blocks, MLlib's default of 10 once the
+session has 10 or more slots.
+Measured (perfbench ``recommend``, sf0.01, 3 slots, seed 1): with 3
+blocks ``ml_als_recommend`` ran 60 of the workload's 64 tasks, billing
+7.8 s of executor time for 4.9 s of CPU, because every block-pair task
+runs the same JIT-cold BLAS and top-k code side by side; 1 block cut it
+to 24 tasks, 3.0 s and 2.6 s with the same jobs and stages. A fixed 1
+block is not the answer either: at sf0.1 in ``bench.py``'s session
+shape on 4 slots, its warm runs took 12.4–15.2 s with 1 block, 6.5–8.3 s
+with 3 (the split rule) and 6.8–9.3 s with 4.
+
+Known cost not fixed here: ``fit`` plans the ratings twice, once for
+its own ``select(...).rdd`` and once in MLlib's
+``Instrumentation.logDataset``, which calls ``dataset.rdd`` on a second
+QueryExecution. Under AQE each ``.rdd`` runs the ratings' broadcast and
+shuffle-map stages, so a cold ``ml_als_recommend`` runs those two jobs
+twice (jobs 2–5 of a fresh session, after the two schema reads).
 """
 
 from __future__ import annotations
@@ -97,14 +118,18 @@ def _ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def als_estimator(spark: SparkSession):
+def als_estimator(spark: SparkSession, sf_dir: str):
     """The engine's one ALS configuration: rank 8, 5 iterations, fixed
-    seed, on the ``_ratings`` columns, with user and item blocks sized
-    to the session (see the module's scale notes). ALS seeds its initial
-    factors per block, so the fitted model depends on the block count."""
+    seed, on the ``_ratings`` columns of ``sf_dir``, with user and item
+    blocks = ``min(10, defaultParallelism, read splits of lineitem)``
+    (the module's scale notes give the measurements). The split count
+    comes from the planned lineitem scan and launches no job. ALS seeds
+    its initial factors per block, so the fitted model depends on the
+    block count."""
     from pyspark.ml.recommendation import ALS
 
-    blocks = min(10, spark.sparkContext.defaultParallelism)
+    splits = table(spark, sf_dir, "lineitem").rdd.getNumPartitions()
+    blocks = min(10, spark.sparkContext.defaultParallelism, splits)
     return ALS(
         rank=8,
         maxIter=5,
@@ -174,10 +199,10 @@ def ml_als_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
     recommendations per user (the archetype's headline workflow).
 
     rows-checked: (user, rec_rank, item) — 5 rows per user with
-    factors seeded for run-to-run determinism at a given task-slot
-    count (``als_estimator`` sizes the blocks to the session).
+    factors seeded for run-to-run determinism at a given block count
+    (``als_estimator`` sizes the blocks to the session and the input).
     """
-    model = als_estimator(spark).fit(_ratings(spark, sf_dir))
+    model = als_estimator(spark, sf_dir).fit(_ratings(spark, sf_dir))
     recs = model.recommendForAllUsers(5)
     return recs.select(
         "user",

@@ -27,9 +27,9 @@ silently misrepresenting the new fixtures (r11 verdict item 2).
 Usage: python scripts/quality_report.py [out_path]
 
 The ALS entry depends on the session's task slots ($SPARK_GRAFT_CPUS,
-default 32): ALS blocks are min(10, slots) and the entry records them.
-The committed artifact was made with SPARK_GRAFT_CPUS=8, the slot count
-of the test suite's session.
+default 32): ALS blocks are min(10, slots, lineitem read splits) and the
+entry records them. The committed artifact was made with
+SPARK_GRAFT_CPUS=8, the slot count of the test suite's session.
 """
 
 from __future__ import annotations
@@ -212,13 +212,14 @@ def build_report(spark) -> dict:
     # global-mean 14.165, per-user-mean 13.992, per-item-mean 13.864
     # (the strongest degenerate predictor — one constant per item,
     # exactly what a broken factorization collapses to), ALS 8.610 at
-    # 10 blocks and 8.348 at 8 — a 38-40% margin over the strongest
-    # baseline, so the floor has teeth without flake risk. The
+    # 10 blocks, 8.348 at 8 and 8.648 at 1 — a 37-40% margin over the
+    # strongest baseline, so the floor has teeth without flake risk. The
     # near-random synthetic ratings keep all three baselines close; a
     # real-taste corpus would separate them further.
     # The model is the one ml_als_recommend serves: its user and item
-    # blocks follow the session's task slots, and ALS seeds its initial
-    # factors per block, so the block count is recorded with the RMSE.
+    # blocks follow the session's task slots and lineitem's read splits,
+    # and ALS seeds its initial factors per block, so the block count is
+    # recorded with the RMSE.
     from pyspark.sql.window import Window
 
     from movierecommender_sentimentanalysissytem_spark.ml.pipelines import (
@@ -227,7 +228,7 @@ def build_report(spark) -> dict:
     )
 
     ratings = _ratings(spark, SF_SMALL)
-    als = als_estimator(spark)
+    als = als_estimator(spark, SF_SMALL)
     pred = als.fit(ratings).transform(ratings)
     err = pred.select(
         F.pow(F.col("rating") - F.col("prediction"), 2).alias("se"),

@@ -283,13 +283,12 @@ def test_binned_jaccard_blocking_equals_naive_inequality_join(spark):
 
 
 def test_windowed_lsh_pairs_equal_naive_collect_list_form(spark):
-    """The bounded-state pair generator (window n/hub + hub star pairs)
-    must emit the IDENTICAL pair multiset as the naive
+    """The bounded-state pair generator (window n/hub/members + hub star
+    pairs) must emit the IDENTICAL pair multiset as the naive
     collect-the-whole-bucket formulation, across small buckets, buckets
     exactly at the cap, and oversized buckets."""
     from movierecommender_sentimentanalysissytem_spark.functions.dedup import (
         LSH_BUCKET_CAP,
-        _ALL_PAIRS,
         _lsh_candidate_pairs,
     )
 
@@ -306,6 +305,11 @@ def test_windowed_lsh_pairs_equal_naive_collect_list_form(spark):
     got = sorted(
         (r.doc_a, r.doc_b) for r in _lsh_candidate_pairs(bands).collect()
     )
+    all_pairs = """
+        flatten(transform(sequence(1, size(ids) - 1),
+            i -> transform(slice(ids, i + 1, size(ids) - i),
+                x -> named_struct('doc_a', element_at(ids, i), 'doc_b', x))))
+    """
     star = """
         transform(slice(ids, 2, size(ids) - 1),
             x -> named_struct('doc_a', element_at(ids, 1), 'doc_b', x))
@@ -318,7 +322,7 @@ def test_windowed_lsh_pairs_equal_naive_collect_list_form(spark):
         .select(
             F.explode(
                 F.expr(
-                    f"CASE WHEN size(ids) <= {LSH_BUCKET_CAP} THEN {_ALL_PAIRS} "
+                    f"CASE WHEN size(ids) <= {LSH_BUCKET_CAP} THEN {all_pairs} "
                     f"ELSE {star} END"
                 )
             ).alias("p")
@@ -335,10 +339,11 @@ def test_lsh_pairs_band_row_uniqueness_contract(spark):
 
     1. The real producer (signature posexplode in dedup_near_minhash)
        satisfies it — one row per doc per band, ever.
-    2. The documented divergence under contract VIOLATION: a duplicated
-       hub row is dropped by the hub/star branch (no (hub, hub)
-       self-pair), while duplicated non-hub rows still match the naive
-       form. This is the exact behavior the docstring promises."""
+    2. The documented divergence under contract VIOLATION: no row
+       pairs with its own doc_id, so a duplicated row yields no
+       self-pair (a duplicated hub is dropped by the star branch), while
+       its other pairs still repeat as in the naive form. This is the
+       exact behavior the docstring promises."""
     from movierecommender_sentimentanalysissytem_spark.functions.dedup import (
         LSH_BUCKET_CAP,
         _lsh_candidate_pairs,
@@ -362,6 +367,22 @@ def test_lsh_pairs_band_row_uniqueness_contract(spark):
     )
     assert got == want
     assert (0, 0) not in got
+
+    # The same violation in a bucket within the cap: each row pairs with
+    # every larger member, so the duplicate's pairs repeat (as in the
+    # naive all-pairs form) but it never pairs with itself.
+    rows = [(i, 2, "s") for i in range(5)] + [(2, 2, "s")]
+    bands = spark.createDataFrame(
+        rows, "doc_id long, band_id int, band_key string"
+    )
+    got = sorted(
+        (r.doc_a, r.doc_b) for r in _lsh_candidate_pairs(bands).collect()
+    )
+    want = sorted(
+        [(a, b) for a in range(5) for b in range(a + 1, 5)]
+        + [(0, 2), (1, 2), (2, 3), (2, 4)]
+    )
+    assert got == want
 
 
 # Every literal filter constant whose semantics depend on the fixture

@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from movierecommender_sentimentanalysissytem_spark import registry
+from movierecommender_sentimentanalysissytem_spark.sources.tables import table
 from tests.conftest import SF_SMALL
 
 QS = registry.queries()
@@ -29,13 +30,14 @@ def test_als_model_rmse_reasonable(spark):
     data — the strongest degenerate baseline (one constant per item is
     exactly what a broken factorization collapses to), strengthened
     from the global-mean floor per the r13 verdict. Baseline ladder
-    measured round 14 at SF_SMALL: global-mean 14.165, per-user-mean
-    13.992, per-item-mean 13.864, ALS 8.610 at 10 blocks (8.348 at
-    the suite's 8) — a 38-40% margin, so the stronger floor carries no
-    flake risk. Catches broken wiring,
+    measured at SF_SMALL: global-mean 14.165, per-user-mean 13.992,
+    per-item-mean 13.864, ALS 8.610 at 10 blocks, 8.348 at 8 and 8.648
+    at 1 — a 37-40% margin, so the stronger floor carries no flake
+    risk. Catches broken wiring,
     seeds, or degenerate convergence that the global-mean bar would
     let through. The model is the one ml_als_recommend serves
-    (ml.pipelines.als_estimator), blocked to the session's task slots."""
+    (ml.pipelines.als_estimator), blocked to min(10, task slots,
+    lineitem read splits): one split, so one block, at SF_SMALL."""
     from pyspark.sql.window import Window
 
     from movierecommender_sentimentanalysissytem_spark.ml.pipelines import (
@@ -44,8 +46,10 @@ def test_als_model_rmse_reasonable(spark):
     )
 
     ratings = _ratings(spark, SF_SMALL)
-    model = als_estimator(spark).fit(ratings)
-    blocks = min(10, spark.sparkContext.defaultParallelism)
+    model = als_estimator(spark, SF_SMALL).fit(ratings)
+    splits = table(spark, SF_SMALL, "lineitem").rdd.getNumPartitions()
+    blocks = min(10, spark.sparkContext.defaultParallelism, splits)
+    assert blocks == 1
     assert model.userFactors.rdd.getNumPartitions() == blocks
     pred = model.transform(ratings)
     err = pred.select(
@@ -60,6 +64,33 @@ def test_als_model_rmse_reasonable(spark):
         F.sqrt(F.avg("se_item_mean")).alias("rmse_item_mean"),
     ).collect()[0]
     assert err.rmse < err.rmse_item_mean, (err.rmse, err.rmse_item_mean)
+
+
+def test_als_blocks_capped_at_slots_for_a_many_split_input(spark, tmp_path):
+    """A lineitem that reads as at least as many splits as the session
+    has task slots gets min(10, defaultParallelism) blocks, the cap the
+    one-file fixtures never reach. Sizing the estimator launches no
+    Spark job."""
+    import pyarrow.parquet as pq
+
+    from movierecommender_sentimentanalysissytem_spark.ml.pipelines import (
+        als_estimator,
+    )
+
+    slots = spark.sparkContext.defaultParallelism
+    li = pq.read_table(f"{SF_SMALL}/lineitem.parquet")
+    out = tmp_path / "lineitem.parquet"
+    out.mkdir()
+    step = -(-li.num_rows // slots)
+    for i in range(slots):
+        pq.write_table(li.slice(i * step, step), out / f"part-{i:03d}.parquet")
+    # the first read infers the schema (one job); later reads reuse it
+    assert table(spark, str(tmp_path), "lineitem").rdd.getNumPartitions() >= slots
+    sc = spark.sparkContext._jsc.sc()
+    j0 = sc.dagScheduler().nextJobId()
+    als = als_estimator(spark, str(tmp_path))
+    assert sc.dagScheduler().nextJobId() == j0
+    assert als.getNumUserBlocks() == als.getNumItemBlocks() == min(10, slots)
 
 
 def test_sentiment_pipeline_beats_chance(spark):

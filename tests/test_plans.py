@@ -448,3 +448,40 @@ Arguments: [MapInPandas]
     assert not PYTHON_OK - set(QS)
     assert python_nodes(_plan(spark, "udf_python_scalar")) == ["BatchEvalPython"]
     assert python_nodes(_plan(spark, "text_lexicon_sentiment")) == []
+
+
+def _physical(spark, key: str) -> str:
+    """The planned (not yet executed) physical plan, one line per node."""
+    df = QS[key](spark, SF_SMALL)
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _cache_ids(spark, key: str) -> set[int]:
+    """RDD ids of the distinct caches a key's plan reads (one cache read
+    by several branches counts once)."""
+    stack = [QS[key](spark, SF_SMALL)._jdf.queryExecution().withCachedData()]
+    ids: set[int] = set()
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "InMemoryRelation":
+            ids.add(node.cacheBuilder().cachedColumnBuffers().id())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return ids
+
+
+def test_tfidf_explodes_the_corpus_once(spark):
+    """text_tfidf takes df as a word-window count over tf, so one
+    explode and one (doc_id, word) exchange serve both tf and df."""
+    plan = _physical(spark, "text_tfidf")
+    assert plan.count("Generate explode") == 1
+    assert plan.count("Exchange hashpartitioning(doc_id") == 1
+
+
+def test_minhash_caches_only_the_hashed_shingles(spark):
+    """dedup_near_minhash reads one cache (hv) and shuffles its band
+    rows once: the bucket pairs come from a single window pass over the
+    band-key partition, with no cache of their own."""
+    assert len(_cache_ids(spark, "dedup_near_minhash")) == 1
+    plan = _physical(spark, "dedup_near_minhash")
+    assert plan.count("Exchange hashpartitioning(band_id") == 1
