@@ -28,7 +28,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per implemented operator from SURVEY.md §2, in
+    driver-sweep order: the driver checks a budget of keys in dict
+    order, so the dict leads with the keys that most need re-checking
+    (``registry._sweep_order``, derived from ``CORRECTNESS_r*.json``)."""
     return registry.queries()
 
 

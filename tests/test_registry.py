@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 import __spark_entry__ as entrymod
+from movierecommender_sentimentanalysissytem_spark import registry
 
 
 def test_all_oracle_keys_have_queries():
@@ -71,135 +74,133 @@ def test_entry_smoke(spark):
     assert set(df.columns) == {"n_name", "revenue", "n_items"}
 
 
-def test_sweep_order_maximizes_new_driver_coverage():
-    """The driver's correctness sweep has a per-round key budget (50)
-    and walks queries() in dict order. The invariant — derived from the
-    SAME green-set constant the ordering uses, so this test cannot go
-    stale when new rounds are folded in: explicit priority keys lead,
-    then every key without a driver row sorts before every
-    already-checked key, so the unchecked∩first-50 set is maximal."""
-    from movierecommender_sentimentanalysissytem_spark.registry import (
-        _DRIVER_CHECKED,
-        _PRIORITY,
-        oracle_sql,
-        queries,
-    )
+GREEN = {"hash_match": True, "err": None}
+RED = {"hash_match": False, "err": None}
+NO_ORACLE = {"hash_match": None, "err": "no_oracle"}
 
-    order = list(queries())
-    # (0) explicit priority keys occupy the very front, in order
-    assert tuple(order[: len(_PRIORITY)]) == tuple(_PRIORITY)
-    # (1) no already-checked key may precede an unchecked key
-    rest = [k for k in order if k not in _PRIORITY]
-    first_checked = next(
-        (i for i, k in enumerate(rest) if k in _DRIVER_CHECKED), len(rest)
-    )
-    stragglers = [k for k in rest[first_checked:] if k not in _DRIVER_CHECKED]
-    assert not stragglers, f"unchecked keys sorted after checked ones: {stragglers}"
-    # (2) the 50-key budget is spent on maximal NEW signal: the first 50
-    # positions hold exactly every unchecked key outside the priority
-    # prefix (up to the budget left after that prefix).
-    unchecked_nonprio = [
-        k for k in order if k not in _DRIVER_CHECKED and k not in _PRIORITY
+
+def _live_sweep():
+    """The live order with its derived history: (order, last_ok, head),
+    where head is the active priority keys in listed order, then the
+    keys whose most recent row is red."""
+    order = list(registry.queries())
+    last_ok, red = registry._last_verified(order, registry._driver_rounds())
+    active = [
+        k for k, since in registry._PRIORITY.items() if last_ok.get(k, 0) <= since
     ]
-    want_new = min(50 - len(_PRIORITY), len(unchecked_nonprio))
-    got_new = sum(
-        1
-        for k in order[:50]
-        if k not in _DRIVER_CHECKED and k not in _PRIORITY
+    return order, last_ok, active + [k for k in order if k in red and k not in active]
+
+
+def test_driver_rounds_reads_the_repo_artifacts(tmp_path, monkeypatch):
+    """The artifacts are found from the package's location, whatever
+    the working directory: a wrong path would silently empty the
+    history and the sweep would fall back to registration order."""
+    monkeypatch.chdir(tmp_path)
+    numbers = [n for n, _ in registry._driver_rounds()]
+    assert set(range(1, 16)) <= set(numbers)
+    assert numbers == sorted(numbers)
+
+
+def test_driver_rounds_sort_by_round_number(tmp_path):
+    (tmp_path / "CORRECTNESS_r9.json").write_text(json.dumps({"a": RED}))
+    (tmp_path / "CORRECTNESS_r10.json").write_text(json.dumps({"a": GREEN}))
+    rounds = registry._driver_rounds(tmp_path)
+    assert [n for n, _ in rounds] == [9, 10]
+    assert registry._last_verified(["a"], rounds) == ({"a": 10}, set())
+
+
+def test_driver_rounds_reject_a_malformed_record(tmp_path):
+    (tmp_path / "CORRECTNESS_r01.json").write_text(
+        json.dumps({"agg_global": GREEN, "agg_groupby": {"hash_match": True}})
     )
-    assert got_new == want_new, (
-        f"first 50 contains {got_new} unchecked non-priority keys, "
-        f"want exactly {want_new}"
-    )
-    # oracle dict must follow the same ordering contract
-    osql = list(oracle_sql())
-    assert osql == [k for k in order if k in set(osql)]
+    with pytest.raises(ValueError, match=r"CORRECTNESS_r01\.json.*agg_groupby"):
+        registry._driver_rounds(tmp_path)
+
+
+def test_no_artifacts_still_lists_every_key(tmp_path, monkeypatch):
+    assert registry._driver_rounds(tmp_path) == []
+    read = registry._driver_rounds
+    monkeypatch.setattr(registry, "_driver_rounds", lambda: read(tmp_path))
+    assert set(registry.queries()) == set(registry.QUERIES)
+    assert set(registry.oracle_sql()) == set(registry.ORACLES)
+
+
+def test_priority_head_leads_in_listed_order(monkeypatch):
+    monkeypatch.setattr(registry, "_PRIORITY", {"p2": 1, "p1": 1})
+    rounds = [(1, {k: GREEN for k in ("a", "b", "p1", "p2")})]
+    assert registry._sweep_order(["a", "p1", "b", "p2"], rounds) == [
+        "p2", "p1", "a", "b",
+    ]
+
+
+def test_priority_key_retires_after_a_newer_row(monkeypatch):
+    monkeypatch.setattr(registry, "_PRIORITY", {"p": 1})
+    keys = ["a", "b", "p"]
+    rounds = [(1, {"a": GREEN, "p": GREEN}), (2, {"b": GREEN})]
+    assert registry._sweep_order(keys, rounds) == ["p", "a", "b"]
+    rounds.append((3, {"p": GREEN}))
+    assert registry._sweep_order(keys, rounds) == ["a", "b", "p"]
+
+
+def test_key_whose_latest_row_is_red_leads():
+    keys = ["a", "b", "r"]
+    rounds = [(1, {k: GREEN for k in keys}), (2, {"b": GREEN, "r": RED})]
+    assert registry._sweep_order(keys, rounds) == ["r", "a", "b"]
+    # a later green row clears it back into staleness order
+    rounds.append((3, {"r": GREEN}))
+    assert registry._sweep_order(keys, rounds) == ["a", "b", "r"]
+
+
+def test_no_oracle_row_is_green_only_for_keys_without_an_oracle():
+    registry._load_all_modules()
+    with_oracle = next(iter(registry.ORACLES))
+    rows_only = next(k for k in registry.QUERIES if k not in registry.ORACLES)
+    rounds = [(4, {with_oracle: NO_ORACLE, rows_only: NO_ORACLE})]
+    last_ok, red = registry._last_verified([with_oracle, rows_only], rounds)
+    assert last_ok == {rows_only: 4}
+    assert red == {with_oracle}
+
+
+def test_keys_without_rows_come_before_checked_keys():
+    """Unregistered keys in the artifacts are ignored."""
+    rounds = [(1, {"c1": GREEN, "c2": GREEN, "gone": RED})]
+    assert registry._sweep_order(["c1", "n1", "c2", "n2"], rounds) == [
+        "n1", "n2", "c1", "c2",
+    ]
+
+
+def test_sweep_order_maximizes_new_driver_coverage():
+    """On the live artifacts: the head leads, then every key without a
+    driver row sorts before every checked key, and oracle_sql() follows
+    the same order."""
+    order, last_ok, head = _live_sweep()
+    assert order[: len(head)] == head
+    seen = [k in last_ok for k in order[len(head):]]
+    assert seen == sorted(seen), "unchecked keys sorted after checked ones"
+    osql = list(registry.oracle_sql())
+    assert osql == [k for k in order if k in registry.ORACLES]
 
 
 def test_checked_tail_is_staleness_ordered():
-    """Once every key has a driver row, the budget left after the
-    unchecked head should re-verify the STALEST records first: within
-    the already-checked tail, a key last checked in round i must never
-    appear after a key last checked in round j > i. _PRIORITY keys
-    jump to the very front by design (rewritten since their last row),
-    so they are exempt."""
-    from movierecommender_sentimentanalysissytem_spark.registry import (
-        _PRIORITY,
-        _R1_DRIVER_CHECKED,
-        _R2_DRIVER_CHECKED,
-        _R3_DRIVER_CHECKED,
-        _R4_DRIVER_CHECKED,
-        _R5_DRIVER_CHECKED,
-        _R6_DRIVER_CHECKED,
-        _R7_DRIVER_CHECKED,
-        _R8_DRIVER_CHECKED,
-        _R9_DRIVER_CHECKED,
-        _R10_DRIVER_CHECKED,
-        _R11_DRIVER_CHECKED,
-        _R12_DRIVER_CHECKED,
-        _R13_DRIVER_CHECKED,
-        queries,
-    )
-
-    last = {}
-    for rnd, checked in enumerate(
-        (_R1_DRIVER_CHECKED, _R2_DRIVER_CHECKED,
-         _R3_DRIVER_CHECKED, _R4_DRIVER_CHECKED,
-         _R5_DRIVER_CHECKED, _R6_DRIVER_CHECKED,
-         _R7_DRIVER_CHECKED, _R8_DRIVER_CHECKED,
-         _R9_DRIVER_CHECKED, _R10_DRIVER_CHECKED, _R11_DRIVER_CHECKED,
-         _R12_DRIVER_CHECKED, _R13_DRIVER_CHECKED),
-        start=1,
-    ):
-        for k in checked:
-            last[k] = rnd
-    seq = [last[k] for k in queries() if k in last and k not in _PRIORITY]
+    """Outside the head, a key last verified in round i never sorts
+    after a key last verified in round j > i."""
+    order, last_ok, head = _live_sweep()
+    seq = [last_ok.get(k, 0) for k in order[len(head):]]
     assert seq == sorted(seq), "checked tail not staleness-ordered"
 
 
-def test_continuation_keys_queue_behind_first_wave():
-    """Newer debut tiers (_NEW_R5B, then _NEW_R7, then _NEW_R7B) must
-    not displace longer-waiting unchecked keys from the 50-key driver
-    budget: as long as ≥50 older unchecked keys exist, the first 50
-    contain no newer-tier keys (module import order would otherwise
-    interleave them in), and the unchecked block orders as
-    pre-R5B → R5B → R7 → R7B."""
-    from movierecommender_sentimentanalysissytem_spark.registry import (
-        _DRIVER_CHECKED,
-        _NEW_R5B,
-        _NEW_R7,
-        _NEW_R7B,
-        _NEW_R7C,
-        _PRIORITY,
-        queries,
-    )
-
-    # _PRIORITY keys jump the waiting-tier ordering by design (forced
-    # re-checks / pre-emptive fixes), so they are exempt here.
-    unchecked = [
-        k
-        for k in queries()
-        if k not in _DRIVER_CHECKED and k not in _PRIORITY
-    ]
-    newer = _NEW_R5B | _NEW_R7 | _NEW_R7B | _NEW_R7C
-    older = [k for k in unchecked if k not in newer]
-    if len(older) >= 50:
-        assert not [k for k in unchecked[:50] if k in newer]
-    # tier ordering: the unchecked block is pre-R5B keys, then R5B,
-    # then R7, then R7B, then R7C — each tier contiguous
-    def tier(k):
-        if k in _NEW_R7C:
-            return 4
-        if k in _NEW_R7B:
-            return 3
-        if k in _NEW_R7:
-            return 2
-        if k in _NEW_R5B:
-            return 1
-        return 0
-
-    tiers = [tier(k) for k in unchecked]
-    assert tiers == sorted(tiers), "unchecked block not tier-ordered"
+def test_sweep_budget_skips_the_newest_round_while_staler_keys_wait():
+    """The driver checks the first 50 keys. Outside the head, none of
+    them may have a row from the newest round while 50 or more keys
+    with staler rows wait behind them."""
+    order, last_ok, head = _live_sweep()
+    newest = max(last_ok.values())
+    staler = [k for k in order if k not in head and last_ok.get(k, 0) < newest]
+    if len(staler) >= 50:
+        fresh = [
+            k for k in order[:50] if k not in head and last_ok.get(k) == newest
+        ]
+        assert not fresh, f"first 50 re-check round-{newest} keys: {fresh}"
 
 
 @pytest.mark.slow
@@ -288,6 +289,13 @@ def test_expensive_tier_keys_exist_in_registry():
     )
     stray = [k for k in _EXPENSIVE if not k.startswith(families)]
     assert not stray, f"undocumented family in _EXPENSIVE: {stray}"
+
+
+def test_priority_keys_exist_in_registry():
+    """A misspelled or removed _PRIORITY key would silently lead
+    nothing."""
+    unknown = set(registry._PRIORITY) - set(registry.queries())
+    assert not unknown, f"_PRIORITY names unregistered keys: {unknown}"
 
 
 def test_recall_artifact_covers_exactly_the_rows_only_keys():
