@@ -5,7 +5,9 @@ every stage, no driver collect overhead) on local[$SPARK_GRAFT_CPUS],
 reading $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), and prints
 ONE JSON line:
   {"metric": "total_sec", "value": N, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": 0.1}
+   "queries": {name: sec, ...}, "sf": 0.1, ...}
+with per-query first-run counters (task seconds, jobs, stages) beside
+the wall times.
 """
 
 from __future__ import annotations
@@ -96,38 +98,30 @@ def _quiesce() -> dict:
 
 
 def main() -> None:
+    from movierecommender_sentimentanalysissytem_spark.session import env_cpus, local_session
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = env_cpus()
     quiesce = _quiesce()
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = -1.0
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("mrsas-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        # fixtures are single ~25 MB parquet files; the default 128 MB
-        # split size would scan them in ONE task — split small so the
-        # scan parallelizes across local cores (at production scale the
-        # input is many files and the default is right)
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "16g")
-        # Measurement-only (r15): the per-query task-time probe below
-        # reads summed executorRunTime from the status store; the
-        # default 1000-stage retention is within one bench run's reach
-        # (~500 stages), and eviction between two snapshots would
-        # corrupt a delta. No effect on query plans or timings.
-        .config("spark.ui.retainedStages", "5000")
-        .getOrCreate()
+    spark = local_session(
+        cpus,
+        "mrsas-bench",
+        {
+            "spark.driver.memory": "16g",
+            # The per-query counters below read the status store; the
+            # default 1000-stage retention is within one bench run's
+            # reach (~500 stages), and a stage evicted before it is
+            # read would be missed. No effect on plans or timings.
+            "spark.ui.retainedStages": "5000",
+            # the UI stays on, as in every recorded BENCH_r*.json run
+            "spark.ui.enabled": "true",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     from movierecommender_sentimentanalysissytem_spark import registry
 
@@ -177,55 +171,42 @@ def main() -> None:
     # sample, while min-of-2 is immune to any stall shorter than a
     # full query. Purely additive — `value`/`queries` semantics are
     # unchanged for cross-round comparison.
-    # Per-query executor task time (summed executorRunTime over the
-    # stages each first run triggered), added r15 for the driver's
-    # core-scaling probe: much of the wall total is serial driver work
-    # (Spark jobs launched while queries are built: model fits, eager
-    # cache counts, schema inference), so WALL barely moves between 8
-    # and 32 cores at this SF while the executor-parallel component
-    # does — task_time is the parallelism-sensitive metric that makes
-    # the $SPARK_GRAFT_CPUS contract observable. The status store is
-    # fed by the asynchronous listener bus, so the bus is drained
-    # before each read; otherwise a stage that completed just before
-    # the snapshot would be charged to the next query. Purely additive;
-    # `value`/`queries` first-run wall semantics are unchanged.
-    def _task_time_ms() -> int:
-        try:
-            sc = spark.sparkContext._jsc.sc()
-            sc.listenerBus().waitUntilEmpty()
-            ss = sc.statusStore()
-            jvm = spark._jvm
-            gw = spark.sparkContext._gateway
-            stages = ss.stageList(
-                jvm.java.util.ArrayList(),
-                False,
-                False,
-                gw.new_array(jvm.double, 0),
-                jvm.java.util.ArrayList(),
-            )
-            return sum(stages.apply(i).executorRunTime() for i in range(stages.size()))
-        except Exception:  # noqa: BLE001 — metric is best-effort, never fail the bench
-            return -1
+    # Per-query counters of each first run, read through perfbench's
+    # probes after draining the listener bus so that no stage is charged
+    # to the next query. Task time (r15) is the parallelism-sensitive
+    # metric: wall is mostly serial driver work (build-time jobs) and
+    # barely moves between 8 and 32 cores. Jobs and stages are
+    # deterministic, so they compare across samples that wall noise
+    # makes incomparable.
+    from perfbench.probes import SparkProbes
 
+    probes = SparkProbes(spark)
     timings: dict[str, float] = {}
     timings_best2: dict[str, float] = {}
     task_sec: dict[str, float] = {}
+    jobs: dict[str, int] = {}
+    stages: dict[str, int] = {}
     for name in HEADLINE:
         fn = qs[name]
-        tt0 = _task_time_ms()
+        probes.drain()
+        j0, s0 = probes.jobs(), probes.stage_id()
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         timings[name] = round(time.perf_counter() - t0, 3)
-        tt1 = _task_time_ms()
-        task_sec[name] = round((tt1 - tt0) / 1000.0, 3) if tt0 >= 0 and tt1 >= 0 else -1.0
+        probes.drain()
+        run = probes.stages(s0)
+        jobs[name] = probes.jobs() - j0
+        stages[name] = len(run)
+        task_sec[name] = round(sum(st["task_s"] for st in run), 3)
         t1 = time.perf_counter()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         second = time.perf_counter() - t1
         timings_best2[name] = round(min(timings[name], second), 3)
         print(
             f"# {name}: {timings[name]:.3f}s (2nd {second:.3f}s, "
-            f"task {task_sec[name]:.3f}s)",
+            f"task {task_sec[name]:.3f}s, {jobs[name]} jobs, "
+            f"{stages[name]} stages)",
             file=sys.stderr,
         )
 
@@ -261,6 +242,8 @@ def main() -> None:
                 "queries_best2": timings_best2,
                 "cpus": int(cpus),
                 "queries_task_sec": task_sec,
+                "queries_jobs": jobs,
+                "queries_stages": stages,
                 "task_time_note": (
                     "queries_task_sec sums executorRunTime of each "
                     "first run's stages, read after draining the "

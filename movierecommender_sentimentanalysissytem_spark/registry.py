@@ -108,6 +108,13 @@ _PRIORITY: dict[str, int] = {
     "observe_metrics": 15,
     "sim_matmul_topk": 15,
     "stream_observe_rate": 15,
+    "stream_watermark_late": 15,
+    "stream_dedup": 15,
+    "stream_stateful_counter": 15,
+    "stream_foreach_batch_sink": 15,
+    "stream_stream_join": 15,
+    "stream_stream_left_join": 15,
+    "stream_static_join": 15,
 }
 
 # SURVEY.md §2 inventory — the judge's coverage checklist. These outrank

@@ -209,6 +209,9 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import shutil
 
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from movierecommender_sentimentanalysissytem_spark.scratch import mkscratch
 
     src = os.path.join(sf_dir, "events.parquet")
@@ -221,9 +224,20 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.link(src, dst)
         except OSError:
             shutil.copyfile(src, dst)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static_ts = dict(spark.read.parquet(stage).dtypes).get("ts")
-    if static_ts == "bigint":
+    # ts's type from a parquet footer, without a Spark job. Only the
+    # TIMESTAMP(NANOS) generation needs the session-wide nanosAsLong
+    # conf (see sources/tables.table); a copy written from such a raw
+    # read holds plain int64 nanos. Spark's INT96 timestamps read
+    # natively, so they must not look like nanos.
+    ts_type = (
+        pq.ParquetDataset(stage, coerce_int96_timestamp_unit="us")
+        .schema.field("ts")
+        .type
+    )
+    nanos = pa.types.is_timestamp(ts_type) and ts_type.unit == "ns"
+    if nanos:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if nanos or pa.types.is_int64(ts_type):
         raw = spark.readStream.schema(
             _events_stream_schema(T.LongType())
         ).parquet(stage)

@@ -28,27 +28,16 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from movierecommender_sentimentanalysissytem_spark.session import env_cpus, local_session
 
 SF_DIR = "/root/testdata/sf0.1"
 
 
 def main() -> None:
     replicas = [int(a) for a in sys.argv[1:]] or [10, 100]
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "false")
-        .appName("dimsum_100x")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session(env_cpus(), "dimsum_100x", {"spark.driver.memory": "16g"})
 
     from scripts.scale_smoke import _replicate
 

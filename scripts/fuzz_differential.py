@@ -1374,31 +1374,23 @@ def main() -> int:
         )
         return 2
 
-    from pyspark.sql import SparkSession
-
     import os
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from movierecommender_sentimentanalysissytem_spark.session import local_session
 
     # FUZZ_AQE / FUZZ_SHUFFLE_PARTITIONS mirror parity.py's
     # PARITY_* knobs (r12's config-robustness axis): every swept
     # query's agreement should be invariant to the physical-plan
     # regime (adaptive re-planning on/off, odd shuffle fan-out).
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("fuzz-differential")
-        .config(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("FUZZ_SHUFFLE_PARTITIONS", "8"),
-        )
-        .config(
-            "spark.sql.adaptive.enabled",
-            os.environ.get("FUZZ_AQE", "true"),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
+    spark = local_session(
+        8,
+        "fuzz-differential",
+        {
+            "spark.sql.shuffle.partitions": os.environ.get("FUZZ_SHUFFLE_PARTITIONS", "8"),
+            "spark.sql.adaptive.enabled": os.environ.get("FUZZ_AQE", "true"),
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     failures = run_differential(
         spark, sf_dir, [(seed, k) for k in range(n)], only_shape
     )

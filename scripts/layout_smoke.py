@@ -33,6 +33,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
+from movierecommender_sentimentanalysissytem_spark.session import (  # noqa: E402
+    env_cpus,
+    local_session,
+)
+
 # Keys whose OUTPUT may legitimately change when the physical layout
 # (file count / row order within partitions) changes; they must still
 # execute without error. Everything else must also match row counts.
@@ -60,19 +65,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = sys.argv[2:]
     out = f"/tmp/layout_smoke_{os.path.basename(sf_dir.rstrip('/'))}"
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "false")
-        .appName("layout_smoke")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session(env_cpus(), "layout_smoke", {"spark.driver.memory": "16g"})
 
     if not os.path.exists(os.path.join(out, "lineitem.parquet")):
         t0 = time.time()

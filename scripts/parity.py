@@ -135,22 +135,19 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    from pyspark.sql import SparkSession
-
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from movierecommender_sentimentanalysissytem_spark import registry
+    from movierecommender_sentimentanalysissytem_spark.session import local_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("parity")
-        .config("spark.sql.shuffle.partitions", os.environ.get("PARITY_SHUFFLE_PARTITIONS", "32"))
-        .config("spark.sql.adaptive.enabled", os.environ.get("PARITY_AQE", "true"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
+    spark = local_session(
+        8,
+        "parity",
+        {
+            "spark.sql.shuffle.partitions": os.environ.get("PARITY_SHUFFLE_PARTITIONS", "32"),
+            "spark.sql.adaptive.enabled": os.environ.get("PARITY_AQE", "true"),
+            "spark.driver.memory": "8g",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
     con.sql("SET TimeZone='UTC'")

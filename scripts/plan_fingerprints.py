@@ -10,32 +10,23 @@ Usage: python scripts/plan_fingerprints.py [sf_dir]
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    sys.path.insert(0, "/root/repo")
-
-    from pyspark.sql import SparkSession
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, root)
 
     from movierecommender_sentimentanalysissytem_spark.plans.fingerprint import (
         collect,
     )
+    from movierecommender_sentimentanalysissytem_spark.session import local_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("plan-fingerprints")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session(8, "plan-fingerprints")
     fps = collect(spark, sf_dir)
-    with open("/root/repo/PLAN_FINGERPRINTS.json", "w") as fh:
+    with open(os.path.join(root, "PLAN_FINGERPRINTS.json"), "w") as fh:
         json.dump(fps, fh, indent=1, sort_keys=True)
     n_err = sum(1 for v in fps.values() if "__error__" in v)
     print(f"{len(fps)} fingerprints written, {n_err} errors")

@@ -302,14 +302,15 @@ def main() -> int:
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "RECALL.json",
     )
-    from pyspark.sql import SparkSession
+    from movierecommender_sentimentanalysissytem_spark.session import (
+        env_cpus,
+        local_session,
+    )
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "8g")
-        .appName("quality_report")
-        .getOrCreate()
+    spark = local_session(
+        env_cpus(),
+        "quality_report",
+        {"spark.sql.shuffle.partitions": "32", "spark.driver.memory": "8g"},
     )
     try:
         report = build_report(spark)

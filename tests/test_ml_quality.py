@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from movierecommender_sentimentanalysissytem_spark import registry
 from movierecommender_sentimentanalysissytem_spark.sources.tables import table
+from perfbench.probes import SparkProbes
 from tests.conftest import SF_SMALL
 
 QS = registry.queries()
@@ -86,10 +87,10 @@ def test_als_blocks_capped_at_slots_for_a_many_split_input(spark, tmp_path):
         pq.write_table(li.slice(i * step, step), out / f"part-{i:03d}.parquet")
     # the first read infers the schema (one job); later reads reuse it
     assert table(spark, str(tmp_path), "lineitem").rdd.getNumPartitions() >= slots
-    sc = spark.sparkContext._jsc.sc()
-    j0 = sc.dagScheduler().nextJobId()
+    probes = SparkProbes(spark)
+    j0 = probes.jobs()
     als = als_estimator(spark, str(tmp_path))
-    assert sc.dagScheduler().nextJobId() == j0
+    assert probes.jobs() == j0
     assert als.getNumUserBlocks() == als.getNumItemBlocks() == min(10, slots)
 
 

@@ -235,3 +235,19 @@ def test_stream_source_accepts_directory_shaped_events(spark, tmp_path_factory):
         for r in QS["stream_watermark_late"](spark, out).collect()
     }
     assert multi == single and multi
+
+
+def test_stream_build_on_micros_fixtures_leaves_nanos_conf_unset(spark):
+    """The streaming source picks its read path from the parquet footer
+    of events: on the timestamp[us] fixtures it sets no session-wide
+    conf, so nanosAsLong stays reserved for the TIMESTAMP(NANOS)
+    generation (sources/tables.table's rule)."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        assert QS["stream_dedup"](spark, SF_SMALL).count() > 0
+        assert spark.conf.get(key, None) is None
+    finally:
+        if before is not None:
+            spark.conf.set(key, before)
