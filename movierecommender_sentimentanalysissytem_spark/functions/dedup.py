@@ -34,7 +34,11 @@ from movierecommender_sentimentanalysissytem_spark.plans.caching import (
     scoped_persist,
 )
 from movierecommender_sentimentanalysissytem_spark.registry import query
-from movierecommender_sentimentanalysissytem_spark.sources.tables import EMBEDDING_DIM, table
+from movierecommender_sentimentanalysissytem_spark.sources.tables import (
+    EMBEDDING_DIM,
+    spread_scan,
+    table,
+)
 
 # 16 hashes in 8 bands of 2: collision probability for a true pair at
 # Jaccard j is 1-(1-j²)^8 — 0.90 at j=0.5, ≈1 at j≥0.8. The md5 base
@@ -267,22 +271,15 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     small pair set, two joins against the persisted hv (AQE turns
     them into broadcasts when the pair set is small).
 
-    The scan is hash-repartitioned on doc_id BEFORE the persisted
-    projection: the corpus is one parquet file → one partition, and
-    hv would otherwise be cached single-partition, serializing the
-    md5-shingle hashing and the 16 affine minhash folds (the two
-    heaviest per-row stages) on one core. Hash on the unique doc_id
-    (not round-robin, r15): round-robin pays a hidden per-map-task
-    sort of the FULL rows — text payload included — inside the
-    exchange (spark.sql.execution.sortBeforeRepartition, needed for
-    retry determinism), while hashing a unique key spreads just as
-    evenly, skips that sort, and is retry-deterministic by
-    construction (guide §2.5).
+    The scan goes through ``spread_scan`` BEFORE the persisted
+    projection, so the md5-shingle hashing and the 16 affine minhash
+    folds (the two heaviest per-row stages) run on as many cores as
+    the corpus's bytes warrant: hv is cached single-partition, with no
+    exchange, when the corpus is small (sf0.01), and split on doc_id
+    when it is large.
     """
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
     d = (
-        table(spark, sf_dir, "documents")
-        .repartition(par, "doc_id")
+        spread_scan(table(spark, sf_dir, "documents"), "doc_id")
         .withColumn("w", F.split("text", " "))
         .filter(F.size("w") >= 3)
     )
@@ -468,15 +465,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     intersect + union (integer identity; the Jaccard double and the
     oracle hash are unchanged). The set sizes are projected per ROW
     before the join."""
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # Hash-repartition the scan on doc_id before shingling: the
-    # corpus is one parquet file → one partition, and the shingle
-    # transform would otherwise run on a single core below the join's
-    # exchange. Unique key → even spread, no sortBeforeRepartition
-    # pass over the text rows, deterministic under retries (§2.5).
     d = (
-        table(spark, sf_dir, "documents")
-        .repartition(par, "doc_id")
+        spread_scan(table(spark, sf_dir, "documents"), "doc_id")
         .withColumn("w", F.split("text", " "))
         .filter(F.size("w") >= 3)
     )
@@ -491,6 +481,16 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     ex = sh.select("doc_id", "lang", "n_chars", F.explode("s").alias("g"))
+    # Explicit-N repartition on doc_a before the distinct: one shuffle
+    # serves the distinct and the verify join. The candidate relation
+    # is a few MB, so AQE's byte-based coalescing would fold the
+    # CPU-heavy array_intersect stage into one task —
+    # REPARTITION_BY_NUM shuffles are exempt from coalescing. It keeps
+    # the slot count, not spread_scan's byte rule: the candidates are
+    # an intermediate whose size no scan statistic tells in advance.
+    # Where the scan was already spread into as many partitions, Spark
+    # drops this shuffle (the stream side keeps sh's doc_id hashing).
+    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
     cand = (
         ex.select(
             F.col("doc_id").alias("doc_a"),
@@ -513,6 +513,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.abs(F.col("nc_a") - F.col("nc_b")) <= 30)
         )
         .select("doc_a", "doc_b")
+        .repartition(par, "doc_a")
         .distinct()
     )
     a = sh.select(
@@ -527,13 +528,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     inter = F.size(F.array_intersect("s_a", "s_b"))
     jacc = inter.cast("double") / (F.col("ns_a") + F.col("ns_b") - inter)
-    # Explicit-N repartition before the verify join: the candidate
-    # relation is a few MB, so AQE's byte-based coalescing would fold
-    # the CPU-heavy array_intersect stage into one task —
-    # REPARTITION_BY_NUM shuffles are exempt from coalescing.
     return (
-        cand.repartition(par, "doc_a")
-        .join(a, "doc_a")
+        cand.join(a, "doc_a")
         .join(b, "doc_b")
         .filter(jacc >= 0.3)
         .select("doc_a", "doc_b", round4(jacc).alias("jaccard"))
@@ -588,10 +584,8 @@ def dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     along so min(|A|,|B|) costs nothing per pair. No length prefilter
     by design (see above). At 100 TB the explode and the cap filter
     are map-side over input splits; only the candidate pairs shuffle."""
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
     d = (
-        table(spark, sf_dir, "documents")
-        .repartition(par, "doc_id")
+        spread_scan(table(spark, sf_dir, "documents"), "doc_id")
         .withColumn("w", F.split("text", " "))
         .filter(F.size("w") >= 3)
     )
@@ -683,10 +677,10 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     reason as there: the corpus is one small parquet file, so the
     broadcast hash join would stream a single partition on one core.
     By vec_id (not label) because the label blocks are few and would
-    cap parallelism at the block count; by hash (not round-robin,
-    r15) because a unique key spreads as evenly without round-robin's
-    hidden sortBeforeRepartition pass and stays deterministic under
-    retries (§2.5).
+    cap parallelism at the block count; by hash for the reasons in
+    ``spread_scan``. It takes the slot count, not ``spread_scan``'s
+    byte rule, because the pair work grows with the square of the
+    rows, not with the scanned bytes.
     """
     e = table(spark, sf_dir, "embeddings")
     norm = F.expr(_NORM.format(v="embedding"))

@@ -23,6 +23,7 @@ from movierecommender_sentimentanalysissytem_spark.functions.rounding import rou
 from movierecommender_sentimentanalysissytem_spark.registry import query
 from movierecommender_sentimentanalysissytem_spark.sources.tables import (
     literal_table,
+    spread_scan,
     table,
 )
 
@@ -144,15 +145,11 @@ def text_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The text is split ONCE into a row-level array before the zip — a
     ``split`` inlined in the lambda is re-evaluated per element
-    (O(len²) per doc) — and the single-file scan is repartitioned by
-    hash on the unique doc_id so the explode isn't pinned to one core
-    (hash, not round-robin: no sortBeforeRepartition pass over the
-    text rows, retry-deterministic — §2.5)."""
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    d = (
-        table(spark, sf_dir, "documents")
-        .repartition(par, "doc_id")
-        .withColumn("w", F.split("text", " "))
+    (O(len²) per doc) — and the single-file scan goes through
+    ``spread_scan`` so a large corpus's explode isn't pinned to one
+    core."""
+    d = spread_scan(table(spark, sf_dir, "documents"), "doc_id").withColumn(
+        "w", F.split("text", " ")
     )
     bigrams = F.expr(
         "transform(sequence(1, size(w) - 1),"

@@ -13,7 +13,7 @@ from pyspark.sql.window import Window
 
 from movierecommender_sentimentanalysissytem_spark.functions.rounding import round4
 from movierecommender_sentimentanalysissytem_spark.registry import query
-from movierecommender_sentimentanalysissytem_spark.sources.tables import table
+from movierecommender_sentimentanalysissytem_spark.sources.tables import spread_scan, table
 
 # Marker vocabularies for the n-gram language-ID heuristic. The fixture
 # corpus shares one synthetic vocabulary, so markers are arbitrary
@@ -381,18 +381,15 @@ def text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuation word, a total order.
 
     Text is split once per row (an inlined ``split`` re-evaluates per
-    lambda element), the one-file scan is repartitioned off a single
-    core, and the bigram-count relation is scoped-persisted — it
+    lambda element), the one-file scan goes through ``spread_scan``,
+    and the bigram-count relation is scoped-persisted — it
     feeds both the head-word totals and the ranked join."""
     from movierecommender_sentimentanalysissytem_spark.plans.caching import (
         scoped_persist,
     )
 
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    d = (
-        table(spark, sf_dir, "documents")
-        .repartition(par, "doc_id")
-        .withColumn("w", F.split("text", " "))
+    d = spread_scan(table(spark, sf_dir, "documents"), "doc_id").withColumn(
+        "w", F.split("text", " ")
     )
     bigrams = F.expr(
         "transform(sequence(1, size(w) - 1),"
@@ -685,8 +682,8 @@ def text_collocation_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROUNDED score with the bigram as total-order tie-break.
 
     Text is split once per row (an inlined ``split`` re-evaluates per
-    lambda element), the one-file scan is repartitioned off a single
-    core, and the bigram-count relation is scoped-persisted — it
+    lambda element), the one-file scan goes through ``spread_scan``,
+    and the bigram-count relation is scoped-persisted — it
     feeds FOUR consumers (both marginals, the total, the scored
     cells), which Catalyst would otherwise re-derive from the corpus
     four times."""
@@ -694,11 +691,8 @@ def text_collocation_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
         scoped_persist,
     )
 
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    d = (
-        table(spark, sf_dir, "documents")
-        .repartition(par, "doc_id")
-        .withColumn("w", F.split("text", " "))
+    d = spread_scan(table(spark, sf_dir, "documents"), "doc_id").withColumn(
+        "w", F.split("text", " ")
     )
     bigrams = F.expr(
         "transform(sequence(1, size(w) - 1),"

@@ -238,7 +238,9 @@ def sim_threshold_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole nested-loop would run on a single core while 31 idle. A
     cheap shuffle of n rows buys full parallelism on the n² work; on
     a real cluster the probe side arrives already partitioned and the
-    repartition is equally harmless."""
+    repartition is equally harmless. It takes the slot count, not
+    ``spread_scan``'s byte rule, because the pair work grows with the
+    square of the rows, not with the scanned bytes."""
     e = table(spark, sf_dir, "embeddings")
     norm = F.expr(_NORM.format(v="embedding"))
     par = int(spark.conf.get("spark.sql.shuffle.partitions"))

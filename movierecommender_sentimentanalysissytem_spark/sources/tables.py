@@ -24,6 +24,7 @@ picks the read path.
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -56,6 +57,12 @@ EMBEDDING_DIM = 64
 # design point: region/nation are fixed-size; customer/supplier/part grow
 # with SF and must NOT be assumed broadcastable).
 BROADCAST_DIMS: frozenset[str] = frozenset({"region", "nation"})
+
+# Scanned bytes per partition when spread_scan fans a one-file table out
+# over the task slots. It sits between the two measured `documents`
+# sizes: 65 049 B at sf0.01 (one partition: no exchange) and 594 568 B
+# at sf0.1 (five partitions, fewer where there are fewer slots).
+SPREAD_BYTES = 128 * 1024
 
 # absolute path -> ((st_mtime_ns, st_size), schema inferred on the first
 # read of that file version); one entry per path, so a rewritten file
@@ -118,6 +125,40 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return _read_parquet(spark, path)
+
+
+def spread_partitions(df: DataFrame) -> int:
+    """How many partitions ``spread_scan`` gives ``df``:
+    ``min(spark.sql.shuffle.partitions, ceil(bytes / SPREAD_BYTES))``,
+    at least 1. ``bytes`` is the optimizer's size estimate of ``df``
+    (for a bare scan, the file size); reading it plans the query but
+    runs no Spark job."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    slots = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(slots, math.ceil(size / SPREAD_BYTES)))
+
+
+def spread_scan(df: DataFrame, key: str) -> DataFrame:
+    """``df`` (a one-file table scan feeding CPU-heavy per-row work)
+    hash-repartitioned on the unique column ``key`` into
+    ``spread_partitions(df)`` partitions, or ``df`` untouched when that
+    is 1.
+
+    A fixture table is one parquet file, so it scans as one partition,
+    and everything up to the next exchange (shingle hashing, MinHash
+    folds, bigram explodes) would otherwise run on one core. But each
+    extra partition is one more task running cold, interpreted code,
+    so the count follows the input's bytes, not the slot count: a small
+    corpus stays one task with no exchange. Hash on a unique key, not
+    round-robin: round-robin pays a hidden per-map-task sort of the
+    full rows, text included, inside the exchange
+    (``spark.sql.execution.sortBeforeRepartition``, needed for retry
+    determinism), while hashing a unique key spreads just as evenly,
+    skips that sort and is retry-deterministic by construction. An
+    explicit count also keeps AQE from coalescing the partitions back
+    into one task (REPARTITION_BY_NUM shuffles are exempt)."""
+    n = spread_partitions(df)
+    return df if n == 1 else df.repartition(n, key)
 
 
 def literal_table(spark: SparkSession, rows, ddl: str) -> DataFrame:

@@ -481,7 +481,10 @@ def test_tfidf_explodes_the_corpus_once(spark):
 def test_minhash_caches_only_the_hashed_shingles(spark):
     """dedup_near_minhash reads one cache (hv) and shuffles its band
     rows once: the bucket pairs come from a single window pass over the
-    band-key partition, with no cache of their own."""
+    band-key partition, with no cache of their own. The small corpus
+    is hashed straight from its one-partition scan, with no doc_id
+    exchange (sources.tables.spread_scan)."""
     assert len(_cache_ids(spark, "dedup_near_minhash")) == 1
     plan = _physical(spark, "dedup_near_minhash")
     assert plan.count("Exchange hashpartitioning(band_id") == 1
+    assert "Exchange hashpartitioning(doc_id" not in plan

@@ -1,5 +1,6 @@
 """Source layer: ``sources.tables.table`` infers a parquet file's
-schema once per file version, and ``literal_table`` builds constant
+schema once per file version, ``spread_scan`` sizes a one-file scan's
+repartition to its bytes, and ``literal_table`` builds constant
 relations in the JVM. Pinned with Spark job counts and plan shapes, not
 timings, so host noise cannot make these pass or fail."""
 
@@ -18,10 +19,12 @@ from pyspark.sql.types import StructType
 import movierecommender_sentimentanalysissytem_spark as pkg
 from movierecommender_sentimentanalysissytem_spark.sources.tables import (
     literal_table,
+    spread_partitions,
+    spread_scan,
     table,
 )
 from perfbench.probes import SparkProbes
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_ORACLE, SF_SMALL, SF_TENTH
 
 
 def test_table_reuses_inferred_schema(spark):
@@ -53,6 +56,50 @@ def _physical_plan(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain()
     return buf.getvalue()
+
+
+@contextlib.contextmanager
+def _shuffle_partitions(spark, n: int):
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def test_spread_scan_leaves_a_small_scan_unshuffled(spark):
+    """The sf0.01 corpus (65 KB) stays one partition with no exchange,
+    and sizing it plans the scan without running a Spark job."""
+    docs = table(spark, SF_ORACLE, "documents")
+    j0 = SparkProbes(spark).jobs()
+    assert spread_partitions(docs) == 1
+    plan = _physical_plan(spread_scan(docs, "doc_id"))
+    assert SparkProbes(spark).jobs() - j0 == 0
+    assert "Exchange" not in plan, plan
+
+
+def test_spread_scan_splits_a_large_scan_by_bytes(spark):
+    """The sf0.1 corpus (595 KB) is five 128 KiB chunks: 4 partitions
+    on 4 slots, 5 (not 32) on 32, hashed on the key."""
+    docs = table(spark, SF_TENTH, "documents")
+    with _shuffle_partitions(spark, 4):
+        assert spread_partitions(docs) == 4
+        plan = _physical_plan(spread_scan(docs, "doc_id"))
+        assert "Exchange hashpartitioning(doc_id#" in plan, plan
+        assert ", 4), REPARTITION_BY_NUM" in plan, plan
+    with _shuffle_partitions(spark, 32):
+        assert spread_partitions(docs) == 5
+
+
+@pytest.mark.parametrize("slots", [1, 3, 64])
+@pytest.mark.parametrize("sf_dir", [SF_SMALL, SF_ORACLE, SF_TENTH])
+def test_spread_partitions_stays_within_one_and_the_slots(spark, sf_dir, slots):
+    docs = table(spark, sf_dir, "documents")
+    with _shuffle_partitions(spark, slots):
+        assert 1 <= spread_partitions(docs) <= slots
+        # an empty relation's size estimate is 0 bytes
+        assert spread_partitions(docs.limit(0)) == 1
 
 
 @pytest.mark.parametrize(
