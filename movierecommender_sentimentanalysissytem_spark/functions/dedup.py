@@ -104,8 +104,8 @@ _DUCK_SHINGLES_W = (
     " i -> array_to_string(w[i:i+2], ' ')))"
 )
 
-# Base hash of one shingle (md5 → 60 bits → 30 bits).
-_SPARK_BASE = f"({_spark_h('m', 's')} % {_M})"
+# Base hash of one shingle (md5 → 60 bits → 30 bits, so it fits an int).
+_SPARK_BASE = f"CAST({_spark_h('m', 's')} % {_M} AS INT)"
 _DUCK_BASE = f"({_duck_h('m', 's')} % {_M})"
 
 # Distinct base-hash set of a words column ``w`` (MinHash input). Every
@@ -202,54 +202,70 @@ def _minhash_oracle() -> str:
 LSH_BUCKET_CAP = 64
 
 def _lsh_candidate_pairs(bands: DataFrame, cap: int = LSH_BUCKET_CAP) -> DataFrame:
-    """Candidate pairs from band buckets with BOUNDED per-group state.
+    """Candidate pairs from band buckets with BOUNDED per-group state,
+    each pair carrying both members' hash sets.
 
-    Input contract: ``bands`` rows are unique per (doc_id, band_id,
-    band_key). The signature explode upstream guarantees this (one row
-    per doc per band). Pairs are emitted per row and a row never pairs
-    with its own doc_id, so a duplicated row contributes no (d, d)
-    self-pair where the naive collect_list form would emit one; its
-    other pairs repeat as in the naive form. The equivalence test pins
-    both the unique and the duplicated-row behavior.
+    Input: ``bands`` rows ``(doc_id, band_id, band_key, hvals)``, where
+    ``hvals`` is the doc's payload (its hashed-shingle set). Contract:
+    rows are unique per (doc_id, band_id, band_key). The signature
+    explode upstream guarantees this (one row per doc per band). Pairs
+    are emitted per row and a row never pairs with its own doc_id, so a
+    duplicated row contributes no (d, d) self-pair where the naive
+    collect_list form would emit one; its other pairs repeat as in the
+    naive form. The equivalence test pins both the unique and the
+    duplicated-row behavior.
 
     Every member row is annotated over its band-key partition with the
     bucket size ``n`` and hub (min doc_id), then emits its own pairs:
 
-    - buckets within ``cap``: the row also carries the bucket's members
-      (a window ``collect_list`` of the ids of buckets with n ≤ cap, so
-      the array is provably ≤ ``cap`` long no matter how degenerate the
-      corpus) and pairs itself with every larger id — all pairs, each
-      once;
-    - oversized buckets: the member array is empty and each non-hub
+    - buckets within ``cap``: the row also carries the bucket's
+      ``(doc_id, hvals)`` members (a window ``collect_list`` over the
+      buckets with n ≤ cap, so the array is provably ≤ ``cap`` long no
+      matter how degenerate the corpus) and pairs itself with every
+      larger id — all pairs, each once;
+    - oversized buckets: the member array is empty, the row carries the
+      hub's set (``min_by(hvals, doc_id)``) instead, and each non-hub
       row emits ONE star pair (hub, doc_id) — a pathological bucket
       (billions of boilerplate near-identical docs collapsing into one
       band key) streams through as ordinary rows instead of building a
       single giant ``collect_list`` group (the OOM cliff of the naive
       form).
 
-    Both windows share one band-key partitioning and ordering, so the
-    plan has ONE full-data shuffle and a single consumer of it (a
-    small/large union over the annotated frame planned the exchange
-    twice: AQE does not reuse an exchange over a cached scan).
+    Output: ``(doc_a, doc_b, sh_a, sh_b)``, the two ids and their
+    payloads, so a caller verifies each pair on its own row with no
+    join back to the documents. Both windows share one band-key
+    partitioning and ordering, so the plan has ONE full-data shuffle.
     Cross-band duplicate pairs remain; callers dedupe on (doc_a, doc_b)."""
     w = Window.partitionBy("band_id", "band_key")
+    small = F.col("n") <= cap
     m = (
-        bands.withColumn("n", F.count(F.lit(1)).over(w))
-        .withColumn("hub", F.min("doc_id").over(w))
+        bands.select(
+            "*",
+            F.count(F.lit(1)).over(w).alias("n"),
+            F.min("doc_id").over(w).alias("hub"),
+        )
         .filter(F.col("n") >= 2)
-        .withColumn(
-            "ids", F.collect_list(F.when(F.col("n") <= cap, F.col("doc_id"))).over(w)
+        .select(
+            "*",
+            F.collect_list(F.when(small, F.struct("doc_id", "hvals")))
+            .over(w)
+            .alias("members"),
+            F.min_by(F.when(~small, F.col("hvals")), "doc_id")
+            .over(w)
+            .alias("hub_hvals"),
         )
     )
     pairs = f"""
     CASE WHEN n <= {cap}
-      THEN transform(filter(ids, x -> x > doc_id),
-                     x -> named_struct('doc_a', doc_id, 'doc_b', x))
-      ELSE filter(array(named_struct('doc_a', hub, 'doc_b', doc_id)),
+      THEN transform(filter(members, x -> x.doc_id > doc_id),
+                     x -> named_struct('doc_a', doc_id, 'doc_b', x.doc_id,
+                                       'sh_a', hvals, 'sh_b', x.hvals))
+      ELSE filter(array(named_struct('doc_a', hub, 'doc_b', doc_id,
+                                     'sh_a', hub_hvals, 'sh_b', hvals)),
                   p -> p.doc_a != p.doc_b)
     END
     """
-    return m.select(F.explode(F.expr(pairs)).alias("p")).select("p.doc_a", "p.doc_b")
+    return m.select(F.inline(F.expr(pairs)))
 
 
 @query("dedup_near_minhash", oracle=_minhash_oracle())
@@ -264,18 +280,27 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed-shingle sets. SQL-checked end-to-end via the cross-engine
     md5 hash family — the oracle mirrors hash-set Jaccard exactly.
 
-    Scale notes: only the compact (doc_id, hvals) projection is
-    persisted (bigint arrays, read by the signature branch and both
-    verify sides); raw shingle strings never leave the first select.
-    One wide shuffle for bucket grouping, one narrow dedupe on the
-    small pair set, two joins against the persisted hv (AQE turns
-    them into broadcasts when the pair set is small).
+    Scale notes: the plan trades shuffle bytes for jobs. Each band row
+    carries its doc's ``hvals`` through the band-key shuffle, and each
+    candidate pair carries both sets, so Jaccard is checked on the pair
+    row itself: nothing is cached and nothing joins back to ``hv``. The
+    pipeline is one band-key exchange plus one small exchange for the
+    (doc_a, doc_b) dedupe of verified pairs. To keep the carried rows
+    small, ``hvals`` is ``array<int>`` (values < 2^30) and the band key
+    is the band's two minhashes packed into one bigint instead of an
+    md5 string. Measured at sf0.1 on 4 slots against the cached
+    form (``hv`` persisted, two verify joins back to it): jobs 9 → 4,
+    tasks 24 → 10, shuffle 2.32 → 5.39 MB (8.32 MB with bigint sets
+    and md5 keys). The band shuffle holds N_BANDS copies of every set,
+    and block compression folds a doc's copies only where they land in
+    the same reducer block, so the bytes also grow with the partition
+    count (32 slots: 2.37 → 9.12 MB; the band exchange alone writes
+    10.4 MB uncompressed at either slot count).
 
-    The scan goes through ``spread_scan`` BEFORE the persisted
-    projection, so the md5-shingle hashing and the 16 affine minhash
-    folds (the two heaviest per-row stages) run on as many cores as
-    the corpus's bytes warrant: hv is cached single-partition, with no
-    exchange, when the corpus is small (sf0.01), and split on doc_id
+    The scan goes through ``spread_scan``, so the md5-shingle hashing
+    and the 16 affine minhash folds (the two heaviest per-row stages)
+    run on as many cores as the corpus's bytes warrant: one partition
+    with no exchange when the corpus is small (sf0.01), split on doc_id
     when it is large.
     """
     d = (
@@ -283,22 +308,7 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("w", F.split("text", " "))
         .filter(F.size("w") >= 3)
     )
-    # Compact cache: hashed shingle SET per doc — the only state the
-    # signature branch and both Jaccard-verify sides need.
-    # NOTE (r14): a chained-materialization variant (hv eager=False,
-    # populated through m's count — one job instead of two) measured
-    # 1.81 -> 1.65 s warm at sf0.1 with identical output, but the one
-    # full bench run carrying it hung in this query with every stage-
-    # task failing "Block rdd_N does not exist" under heavy host load
-    # (see OPTIMIZATION_r14.md). Causation unproven, but the win is
-    # ~0.15 s and a bench hang is unaffordable — keep both caches
-    # independently eager.
-    hv = scoped_persist(
-        d.select(
-            "doc_id",
-            F.expr(_SPARK_HVALS_W).alias("hvals"),
-        )
-    )
+    hv = d.select("doc_id", F.expr(_SPARK_HVALS_W).alias("hvals"))
     # Signature + band keys as TWO nested higher-order expressions
     # instead of 16 separate array_min(transform(...)) columns + 8
     # md5(concat_ws(...)) columns (r15, guide §1.2 "per-task work" /
@@ -329,33 +339,34 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                       + element_at(array({",".join(f"{b}L" for _, b in _AFFINE)}), j + 1))
                      % {_P}L)))
     """
+    # Band key = the band's two minhashes packed as h1·2^31 + h2. Each
+    # minhash is < P < 2^31, so the packing is exact and injective (the
+    # oracle's md5 of "h1_h2" keys the same buckets) and the key is a
+    # bigint, not a 32-char string, in the band shuffle.
     band_keys = f"""
     transform(
       sequence(0, {N_BANDS - 1}),
-      b -> md5(array_join(
-          transform(slice(hs, {ROWS_PER_BAND} * b + 1, {ROWS_PER_BAND}),
-                    h -> cast(h as string)),
-          '_')))
+      b -> element_at(hs, {ROWS_PER_BAND} * b + 1) * {1 << 31}L
+           + element_at(hs, {ROWS_PER_BAND} * b + 2))
     """
     bands = (
-        hv.select("doc_id", F.expr(sig_fold).alias("hs"))
+        hv.select("doc_id", "hvals", F.expr(sig_fold).alias("hs"))
         .select(
             "doc_id",
-            F.posexplode(F.expr(band_keys)).alias("band_id0", "band_key"),
+            "hvals",
+            F.posexplode(F.expr(band_keys)).alias("band_id", "band_key"),
         )
-        .select("doc_id", (F.col("band_id0") + 1).alias("band_id"), "band_key")
     )
-    pairs = _lsh_candidate_pairs(bands).dropDuplicates(["doc_a", "doc_b"])
-    sa = hv.select(F.col("doc_id").alias("doc_a"), F.col("hvals").alias("sh_a"))
-    sb = hv.select(F.col("doc_id").alias("doc_b"), F.col("hvals").alias("sh_b"))
     jacc = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
         F.array_union("sh_a", "sh_b")
     )
+    # The Jaccard is a function of the pair, so the cross-band dedupe
+    # is a plain distinct over the verified (doc_a, doc_b, jaccard) rows.
     return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _lsh_candidate_pairs(bands)
         .filter(jacc >= 0.5)
         .select("doc_a", "doc_b", round4(jacc).alias("jaccard"))
+        .distinct()
     )
 
 
@@ -759,7 +770,7 @@ def min_label_components(pairs: DataFrame, max_rounds: int = 10) -> DataFrame:
         )
         .distinct()
     )
-    # sym is materialized by scoped_persist's eager count BEFORE the
+    # sym is materialized by scoped_persist's eager fill BEFORE the
     # first checkpoint, so its cache-buffer RDD is never mis-attributed
     # to a generation's capture set (see scoped_local_checkpoint's
     # attribution note) — the in-loop early release below must never

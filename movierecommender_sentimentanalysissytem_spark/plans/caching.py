@@ -2,7 +2,7 @@
 (driver correctness pass, parity harness, bench) releases automatically.
 
 Several operators persist an intermediate read multiple times within
-one query (MinHash's hashed-shingle sets, connected-components label
+one query (n-gram Jaccard's shingle sets, connected-components label
 generations). Spark never auto-unpersists these from Python, so a
 134-key sweep would accumulate one cached plan per caching query —
 slow eviction churn at best, executor-memory pressure at 100 TB.
@@ -37,14 +37,17 @@ def scoped_persist(df: DataFrame, eager: bool = True) -> DataFrame:
     """Persist ``df`` and register it for release at the next query
     build (or an explicit ``release_scoped_caches()``).
 
-    ``eager=True`` (default) materializes the cache immediately with a
-    ``count()``. A lazily-persisted frame is NOT computed once under
-    AQE: adaptive execution submits independent query stages of one
-    action concurrently, and every stage that scans the
-    InMemoryRelation before its blocks exist recomputes the full
-    lineage itself (r14 stage profile: rec_item_similarity's pair join
-    and both norm branches each re-read the parquet scans — 39.3 MB of
-    input for an 11.2 MB lineage — exactly the 3x rederivation the
+    ``eager=True`` (default) materializes the cache immediately by
+    writing it to the ``noop`` sink: one job that computes and stores
+    every partition (a ``count()`` under AQE ran three: the cache
+    stage, the partial-count shuffle and the result job). A
+    lazily-persisted frame is NOT computed once under AQE: adaptive
+    execution submits independent query stages of one action
+    concurrently, and every stage that scans the InMemoryRelation
+    before its blocks exist recomputes the full lineage itself (r14
+    stage profile: rec_item_similarity's pair join and both norm
+    branches each re-read the parquet scans — 39.3 MB of input for an
+    11.2 MB lineage — exactly the 3x rederivation the
     persist was added to prevent). Materializing first both guarantees
     single computation and lets downstream planning SEE the cache's
     partitioning/ordering, which elides the ENSURE_REQUIREMENTS
@@ -58,7 +61,7 @@ def scoped_persist(df: DataFrame, eager: bool = True) -> DataFrame:
     out = df.persist()
     _SCOPED.append(out)
     if eager:
-        out.count()
+        out.write.format("noop").mode("overwrite").save()
     return out
 
 

@@ -120,6 +120,7 @@ _PRIORITY: dict[str, int] = {
     "text_collocation_llr": 15,
     "dedup_ngram_jaccard": 15,
     "dedup_ngram_containment": 15,
+    "dedup_clusters": 15,
 }
 
 # SURVEY.md §2 inventory — the judge's coverage checklist. These outrank

@@ -27,7 +27,7 @@ EXPECT = {
     "win_row_number_topk": "WindowGroupLimit (per-group top-k, no full sort)",
     "sort_multikey": "TakeOrderedAndProject (top-k without global sort)",
     "text_tfidf": "single tokens explode and (doc_id, word) exchange; df is a word-window count over tf",
-    "dedup_near_minhash": "one band-key shuffle under two stacked windows (bucket size/hub, then the member list of buckets within the cap), pairs emitted per row, star pairs for oversized buckets, no self-join, one cache (hv)",
+    "dedup_near_minhash": "one band-key shuffle under two stacked windows (bucket size/hub, then the (doc_id, hvals) member list of buckets within the cap and the hub's set for oversized ones), pairs emitted per row with both hash sets and Jaccard-checked there, star pairs for oversized buckets, no cache, no join",
     "sim_topk_neighbors": "broadcast query block, no CartesianProduct",
     "ml_eval_rmse": "single ratings lineage, window over item partition",
     "join_range_binned": "hash equi-join on value bucket, no nested loop",

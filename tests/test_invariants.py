@@ -298,12 +298,16 @@ def test_windowed_lsh_pairs_equal_naive_collect_list_form(spark):
     for band, size in [(1, 1), (1, 2), (2, LSH_BUCKET_CAP),
                        (3, LSH_BUCKET_CAP + 1), (4, 3 * LSH_BUCKET_CAP)]:
         ids = rng.sample(range(100_000), size)
-        rows += [(i, band, f"k{band}") for i in ids]
+        rows += [(i, band, f"k{band}", [i, i % 7]) for i in ids]
     bands = spark.createDataFrame(
-        rows, "doc_id long, band_id int, band_key string"
+        rows, "doc_id long, band_id int, band_key string, hvals array<int>"
     )
-    got = sorted(
-        (r.doc_a, r.doc_b) for r in _lsh_candidate_pairs(bands).collect()
+    out = _lsh_candidate_pairs(bands).collect()
+    got = sorted((r.doc_a, r.doc_b) for r in out)
+    # every pair carries both members' payloads
+    assert all(
+        r.sh_a == [r.doc_a, r.doc_a % 7] and r.sh_b == [r.doc_b, r.doc_b % 7]
+        for r in out
     )
     all_pairs = """
         flatten(transform(sequence(1, size(ids) - 1),
@@ -351,11 +355,11 @@ def test_lsh_pairs_band_row_uniqueness_contract(spark):
 
     # Pin 2: violate the contract deliberately in an oversized bucket.
     size = LSH_BUCKET_CAP + 2
-    rows = [(i, 1, "k") for i in range(size)]
-    rows.append((0, 1, "k"))      # duplicated HUB row (min doc_id)
-    rows.append((5, 1, "k"))      # duplicated non-hub row
+    rows = [(i, 1, "k", [i]) for i in range(size)]
+    rows.append((0, 1, "k", [0]))      # duplicated HUB row (min doc_id)
+    rows.append((5, 1, "k", [5]))      # duplicated non-hub row
     bands = spark.createDataFrame(
-        rows, "doc_id long, band_id int, band_key string"
+        rows, "doc_id long, band_id int, band_key string, hvals array<int>"
     )
     got = sorted(
         (r.doc_a, r.doc_b) for r in _lsh_candidate_pairs(bands).collect()
@@ -371,9 +375,9 @@ def test_lsh_pairs_band_row_uniqueness_contract(spark):
     # The same violation in a bucket within the cap: each row pairs with
     # every larger member, so the duplicate's pairs repeat (as in the
     # naive all-pairs form) but it never pairs with itself.
-    rows = [(i, 2, "s") for i in range(5)] + [(2, 2, "s")]
+    rows = [(i, 2, "s", [i]) for i in range(5)] + [(2, 2, "s", [2])]
     bands = spark.createDataFrame(
-        rows, "doc_id long, band_id int, band_key string"
+        rows, "doc_id long, band_id int, band_key string, hvals array<int>"
     )
     got = sorted(
         (r.doc_a, r.doc_b) for r in _lsh_candidate_pairs(bands).collect()

@@ -171,6 +171,7 @@ def test_lsh_bucket_cap_keeps_dup_heavy_corpus_linear(spark):
         F.col("id").alias("doc_id"),
         F.lit(1).alias("band_id"),
         F.lit("samekey").alias("band_key"),
+        F.array(F.col("id").cast("int")).alias("hvals"),
     )
     pairs = _lsh_candidate_pairs(bands).collect()
     assert n > LSH_BUCKET_CAP  # the cap is actually exercised
@@ -181,6 +182,7 @@ def test_lsh_bucket_cap_keeps_dup_heavy_corpus_linear(spark):
         F.col("id").alias("doc_id"),
         F.lit(1).alias("band_id"),
         F.lit("k").alias("band_key"),
+        F.array(F.col("id").cast("int")).alias("hvals"),
     )
     assert len(_lsh_candidate_pairs(small).collect()) == 10
 

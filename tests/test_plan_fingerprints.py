@@ -11,6 +11,7 @@ and commit the JSON diff — the diff is the review artifact.
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 import pytest
 
@@ -19,8 +20,9 @@ from movierecommender_sentimentanalysissytem_spark.plans.fingerprint import (
 )
 from tests.conftest import SF_SMALL
 
-with open("/root/repo/PLAN_FINGERPRINTS.json") as fh:
-    STORED = json.load(fh)
+STORED = json.loads(
+    (Path(__file__).resolve().parents[1] / "PLAN_FINGERPRINTS.json").read_text()
+)
 
 # Strategy-bearing representatives: every join algorithm, the cached /
 # broadcast / window / explode shapes, the scale-critical rewrites, and

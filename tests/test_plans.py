@@ -6,7 +6,8 @@ from __future__ import annotations
 import pytest
 
 from movierecommender_sentimentanalysissytem_spark import registry
-from tests.conftest import SF_SMALL
+from perfbench.probes import SparkProbes
+from tests.conftest import SF_ORACLE, SF_SMALL
 
 QS = registry.queries()
 
@@ -146,11 +147,15 @@ def test_scoped_persist_materializes_eagerly(spark):
     and every stage that scans a not-yet-materialized InMemoryRelation
     recomputes the full lineage itself — so a lazy cache dedups nothing
     exactly where it matters (multi-consumer plans). Eager is the
-    default; eager=False opts out."""
+    default; eager=False opts out. The eager fill is one Spark job (a
+    noop write), not the three a count() runs under AQE (cache stage,
+    partial-count shuffle, result)."""
     from movierecommender_sentimentanalysissytem_spark.plans.caching import (
         release_scoped_caches,
         scoped_persist,
     )
+
+    probes = SparkProbes(spark)
 
     jsc = spark.sparkContext._jsc.sc()
 
@@ -168,9 +173,11 @@ def test_scoped_persist_materializes_eagerly(spark):
         eager=False,
     )
     assert fully_cached_ids() == before, "eager=False must not run a job"
+    j0 = probes.jobs()
     eager = scoped_persist(
         spark.range(0, 10_000, 1, 4).selectExpr("id", "id * 7 AS v")
     )
+    assert probes.jobs() - j0 == 1, "an eager persist must fill in one job"
     assert fully_cached_ids() - before, (
         "scoped_persist(eager=True) returned before the cache was "
         "fully materialized"
@@ -478,13 +485,28 @@ def test_tfidf_explodes_the_corpus_once(spark):
     assert plan.count("Exchange hashpartitioning(doc_id") == 1
 
 
-def test_minhash_caches_only_the_hashed_shingles(spark):
-    """dedup_near_minhash reads one cache (hv) and shuffles its band
-    rows once: the bucket pairs come from a single window pass over the
-    band-key partition, with no cache of their own. The small corpus
-    is hashed straight from its one-partition scan, with no doc_id
-    exchange (sources.tables.spread_scan)."""
-    assert len(_cache_ids(spark, "dedup_near_minhash")) == 1
+def test_minhash_verifies_pairs_in_one_band_shuffle(spark):
+    """dedup_near_minhash caches nothing and joins nothing: each band
+    row carries its doc's hash set through the one band-key shuffle,
+    and each candidate pair is verified on its own row. The small
+    corpus is hashed straight from its one-partition scan, with no
+    doc_id exchange (sources.tables.spread_scan)."""
+    assert _cache_ids(spark, "dedup_near_minhash") == set()
     plan = _physical(spark, "dedup_near_minhash")
     assert plan.count("Exchange hashpartitioning(band_id") == 1
     assert "Exchange hashpartitioning(doc_id" not in plan
+    assert "Join" not in plan and "CartesianProduct" not in plan, plan
+
+
+def test_minhash_runs_in_three_jobs(spark):
+    """Build and run dedup_near_minhash at sf0.01: the band-shuffle
+    stage, the pair-dedupe stage and the result, with no cache fill."""
+    from movierecommender_sentimentanalysissytem_spark.sources.tables import table
+
+    table(spark, SF_ORACLE, "documents")  # schema inference is not the query's
+    probes = SparkProbes(spark)
+    j0 = probes.jobs()
+    QS["dedup_near_minhash"](spark, SF_ORACLE).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    assert probes.jobs() - j0 <= 3
