@@ -1,5 +1,6 @@
-"""Static plan audit (SURVEY.md §7 phase 8): explain every registered
-query and flag plan pathologies that would not survive a 100× scale-up.
+"""Static plan audit (SURVEY.md §7 phase 8): walk every registered
+query's physical plan and flag pathologies that would not survive a
+100× scale-up.
 
 Flags:
 - CartesianProduct anywhere
@@ -10,15 +11,22 @@ Flags:
 - Python execution node (rows shipped to a Python worker) not on the
   reviewed allowlist
 
-CLI: ``python scripts/plan_audit.py [sf_dir]`` (thin wrapper).
+The same sweep computes every key's plan fingerprint (plans/
+fingerprint.py): both read the plan objects through one walker,
+``plan_nodes``.
+
+CLI: ``python scripts/plan_fingerprints.py [sf_dir]``.
 """
 
 from __future__ import annotations
 
-import contextlib
-import io
+from pyspark.sql import DataFrame, SparkSession
 
-from pyspark.sql import SparkSession
+from movierecommender_sentimentanalysissytem_spark.plans.fingerprint import (
+    PlanNode,
+    plan_nodes,
+    tally,
+)
 
 # Streaming/ML keys build their plan lazily or run jobs at build time —
 # excluded from the static audit (covered by their own tests).
@@ -166,92 +174,74 @@ PYTHON_OK = {
 }
 
 
-def _tree_nodes(plan: str) -> list[tuple[int, str, str]]:
-    """``(indent, name, id)`` of every node line in the tree section of
-    an ``explain("formatted")`` dump."""
-    import re
-
-    lines = []
-    for raw in plan.partition("\n\n")[0].splitlines():
-        m = re.match(r"^([:+\-| ]*)\*?\(?\d*\)?\s*(\w[\w .]*) \((\d+)\)", raw)
-        if m:
-            lines.append((len(m.group(1)), m.group(2).strip(), m.group(3)))
-    return lines
+def python_nodes(df: DataFrame) -> list[str]:
+    """Names of the Python execution nodes in ``df``'s physical plan."""
+    return _python(plan_nodes(df))
 
 
-def python_nodes(plan: str) -> list[str]:
-    """Names of the Python execution nodes in a formatted plan."""
-    return [name for _, name, _ in _tree_nodes(plan) if name in PYTHON_NODES]
+def _python(nodes) -> list[str]:
+    return [n.name for n in nodes if n.name in PYTHON_NODES]
 
 
-def _single_partition_consumers(plan: str) -> list[str]:
+def _single_partition_consumers(df: DataFrame) -> list[str]:
     """Names of the plan nodes that directly consume a SinglePartition
-    Exchange, from ``explain("formatted")`` output: the detail blocks
-    identify which Exchange ids are single-partition; the indented tree
-    gives each id's consumer (nearest shallower line above)."""
-    import re
-
-    details = plan.partition("\n\n")[2]
-    sp_ids = {
-        m.group(1)
-        for m in re.finditer(
-            r"\((\d+)\) Exchange\n(?:(?!\n\().)*?SinglePartition",
-            details,
-            re.S,
-        )
-    }
-    lines = _tree_nodes(plan)
-    consumers = []
-    for i, (indent, _name, nid) in enumerate(lines):
-        if nid in sp_ids:
-            for j in range(i - 1, -1, -1):
-                if lines[j][0] < indent:
-                    consumers.append(lines[j][1])
-                    break
-    return consumers
+    shuffle exchange in ``df``'s physical plan."""
+    return _consumers(plan_nodes(df))
 
 
-def audit_plans(spark: SparkSession, sf_dir: str) -> list[str]:
-    """Explain every non-skipped registered query; return flag strings
-    (empty list = clean)."""
+def _consumers(nodes) -> list[str]:
+    return [
+        n.parent
+        for n in nodes
+        if n.cls == "ShuffleExchangeExec"
+        and n.obj.outputPartitioning().getClass().getSimpleName()
+        == "SinglePartition$"
+    ]
+
+
+def _flags(key: str, nodes: list[PlanNode]) -> list[str]:
+    names = {n.name for n in nodes}
+    flags = []
+    if "CartesianProduct" in names:
+        flags.append("CartesianProduct")
+    if "BroadcastNestedLoopJoin" in names and key not in NLJ_OK:
+        flags.append("BroadcastNestedLoopJoin (unreviewed)")
+    # A single-partition exchange is only a cliff when a global
+    # SORT/WINDOW consumes it — every global aggregate legitimately
+    # funnels its per-partition partials through one.
+    if key not in NLJ_OK:
+        for consumer in _consumers(nodes):
+            if consumer.startswith(("Sort", "Window")):
+                flags.append(f"SinglePartition exchange into {consumer}")
+                break
+    py = _python(nodes)
+    if py and key not in PYTHON_OK:
+        flags.append(f"Python execution node {py[0]} (unreviewed)")
+    return flags
+
+
+def audit_plans(
+    spark: SparkSession, sf_dir: str, keys=None
+) -> tuple[dict[str, dict[str, int]], list[str]]:
+    """Build and walk every non-skipped registered query (or only those
+    in ``keys``). Returns each key's fingerprint (``{"__error__": ...}``
+    when its build or walk failed) and the audit's flag strings (empty
+    list = clean)."""
     from movierecommender_sentimentanalysissytem_spark import registry
 
     qs = registry.queries()
+    fingerprints: dict[str, dict[str, int]] = {}
     flags_out: list[str] = []
     for key in sorted(qs):
-        if key in SKIP:
+        if key in SKIP or (keys is not None and key not in keys):
             continue
         try:
-            df = qs[key](spark, sf_dir)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            plan = buf.getvalue()
+            nodes = list(plan_nodes(qs[key](spark, sf_dir)))
+            flags = _flags(key, nodes)
         except Exception as exc:  # noqa: BLE001
-            flags_out.append(f"{key}: explain failed: {exc}")
+            fingerprints[key] = {"__error__": str(exc)[:80]}
             continue
-        flags = []
-        if "CartesianProduct" in plan:
-            flags.append("CartesianProduct")
-        if "BroadcastNestedLoopJoin" in plan and key not in NLJ_OK:
-            flags.append("BroadcastNestedLoopJoin (unreviewed)")
-        # formatted explain prints the distribution on the Exchange
-        # node's detail line ("Arguments: SinglePartition, ..."), never
-        # as the literal "Exchange SinglePartition" (the narrower match
-        # was dead code until round 5). A single-partition exchange is
-        # only a cliff when a global SORT/WINDOW consumes it — every
-        # global aggregate legitimately funnels its per-partition
-        # partials through one; so walk the tree for the consumer.
-        if key not in NLJ_OK:
-            for consumer in _single_partition_consumers(plan):
-                if consumer.startswith(("Sort", "Window")):
-                    flags.append(
-                        f"SinglePartition exchange into {consumer}"
-                    )
-                    break
-        py = python_nodes(plan)
-        if py and key not in PYTHON_OK:
-            flags.append(f"Python execution node {py[0]} (unreviewed)")
+        fingerprints[key] = tally(nodes)
         if flags:
             flags_out.append(f"{key}: {', '.join(flags)}")
-    return flags_out
+    return fingerprints, flags_out

@@ -33,14 +33,14 @@ _SCOPED: list[DataFrame] = []
 _SCOPED_CP: list[tuple[object, int]] = []
 
 
-def scoped_persist(df: DataFrame, eager: bool = True) -> DataFrame:
+def scoped_persist(df: DataFrame) -> DataFrame:
     """Persist ``df`` and register it for release at the next query
     build (or an explicit ``release_scoped_caches()``).
 
-    ``eager=True`` (default) materializes the cache immediately by
-    writing it to the ``noop`` sink: one job that computes and stores
-    every partition (a ``count()`` under AQE ran three: the cache
-    stage, the partial-count shuffle and the result job). A
+    The cache is materialized immediately by writing it to the
+    ``noop`` sink: one job that computes and stores every partition
+    (a ``count()`` under AQE ran three: the cache stage, the
+    partial-count shuffle and the result job). A
     lazily-persisted frame is NOT computed once under AQE: adaptive
     execution submits independent query stages of one action
     concurrently, and every stage that scans the InMemoryRelation
@@ -54,14 +54,10 @@ def scoped_persist(df: DataFrame, eager: bool = True) -> DataFrame:
     exchanges+sorts that a lazy cache forces (measured r14: wall
     3.2-9.5 s -> 2.7-2.8 s on rec_item_similarity at sf0.1; input
     39.3 -> 28.1 MB). It also removes a latent hazard: two consumers
-    racing a NON-DETERMINISTIC lineage could observe different data.
-
-    ``eager=False`` keeps the old lazy behavior for frames that are
-    built but conditionally consumed."""
+    racing a NON-DETERMINISTIC lineage could observe different data."""
     out = df.persist()
     _SCOPED.append(out)
-    if eager:
-        out.write.format("noop").mode("overwrite").save()
+    out.write.format("noop").mode("overwrite").save()
     return out
 
 

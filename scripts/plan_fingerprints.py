@@ -1,8 +1,15 @@
-"""Regenerate PLAN_FINGERPRINTS.json: the committed plan-shape snapshot
-every key is diffed against (tests/test_plan_fingerprints.py checks a
-representative subset on every pytest run; run THIS after an
-intentional plan change and commit the diff — the diff IS the review
-artifact).
+"""One sweep over every registered query's physical plan: regenerate
+PLAN_FINGERPRINTS.json and run the static plan audit.
+
+Each non-skipped key is built once and its plan objects walked once
+(``plans/fingerprint.plan_nodes``); the walk gives both the key's
+fingerprint and its audit flags (``plans/audit.py``). The snapshot is
+the plan-shape baseline every key is diffed against
+(tests/test_plan_fingerprints.py checks a representative subset on
+every pytest run): run this after an intentional plan change and
+commit the JSON diff — the diff IS the review artifact. Prints one
+``FLAG`` line per flagged key and exits non-zero on any build error or
+audit flag.
 
 Usage: python scripts/plan_fingerprints.py [sf_dir]
 """
@@ -19,18 +26,21 @@ def main() -> int:
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, root)
 
-    from movierecommender_sentimentanalysissytem_spark.plans.fingerprint import (
-        collect,
+    from movierecommender_sentimentanalysissytem_spark.plans.audit import (
+        audit_plans,
     )
     from movierecommender_sentimentanalysissytem_spark.session import local_session
 
     spark = local_session(8, "plan-fingerprints")
-    fps = collect(spark, sf_dir)
+    fps, flags = audit_plans(spark, sf_dir)
     with open(os.path.join(root, "PLAN_FINGERPRINTS.json"), "w") as fh:
         json.dump(fps, fh, indent=1, sort_keys=True)
     n_err = sum(1 for v in fps.values() if "__error__" in v)
+    for f in flags:
+        print(f"FLAG {f}")
     print(f"{len(fps)} fingerprints written, {n_err} errors")
-    return 1 if n_err else 0
+    print(f"audited {len(fps) - n_err} plans, {len(flags)} flags")
+    return 1 if n_err or flags else 0
 
 
 if __name__ == "__main__":

@@ -6,10 +6,15 @@ from __future__ import annotations
 import pytest
 
 from movierecommender_sentimentanalysissytem_spark import registry
+from movierecommender_sentimentanalysissytem_spark.plans.fingerprint import fingerprint
 from perfbench.probes import SparkProbes
 from tests.conftest import SF_ORACLE, SF_SMALL
 
 QS = registry.queries()
+
+
+def _df(spark, key: str):
+    return QS[key](spark, SF_SMALL)
 
 
 def _plan(spark, key: str) -> str:
@@ -18,7 +23,7 @@ def _plan(spark, key: str) -> str:
 
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        QS[key](spark, SF_SMALL).explain("formatted")
+        _df(spark, key).explain("formatted")
     return buf.getvalue()
 
 
@@ -146,10 +151,9 @@ def test_scoped_persist_materializes_eagerly(spark):
     AQE submits independent query stages of one action concurrently,
     and every stage that scans a not-yet-materialized InMemoryRelation
     recomputes the full lineage itself — so a lazy cache dedups nothing
-    exactly where it matters (multi-consumer plans). Eager is the
-    default; eager=False opts out. The eager fill is one Spark job (a
-    noop write), not the three a count() runs under AQE (cache stage,
-    partial-count shuffle, result)."""
+    exactly where it matters (multi-consumer plans). The fill is one
+    Spark job (a noop write), not the three a count() runs under AQE
+    (cache stage, partial-count shuffle, result)."""
     from movierecommender_sentimentanalysissytem_spark.plans.caching import (
         release_scoped_caches,
         scoped_persist,
@@ -168,21 +172,16 @@ def test_scoped_persist_materializes_eagerly(spark):
 
     release_scoped_caches()
     before = fully_cached_ids()
-    lazy = scoped_persist(
-        spark.range(0, 10_000, 1, 4).selectExpr("id", "id * 3 AS v"),
-        eager=False,
-    )
-    assert fully_cached_ids() == before, "eager=False must not run a job"
     j0 = probes.jobs()
-    eager = scoped_persist(
+    cached = scoped_persist(
         spark.range(0, 10_000, 1, 4).selectExpr("id", "id * 7 AS v")
     )
     assert probes.jobs() - j0 == 1, "an eager persist must fill in one job"
     assert fully_cached_ids() - before, (
-        "scoped_persist(eager=True) returned before the cache was "
+        "scoped_persist returned before the cache was "
         "fully materialized"
     )
-    del lazy, eager
+    del cached
     release_scoped_caches()
 
 
@@ -298,15 +297,13 @@ def test_rfm_quartiles_avoid_global_window(spark):
     """RFM must bucket via the broadcast threshold table — a global
     ntile window over every user is the single-task cliff this
     formulation exists to avoid."""
-    plan = _plan(spark, "rec_rfm_segmentation")
-    assert "Window" not in plan
-
     from movierecommender_sentimentanalysissytem_spark.plans.audit import (
         _single_partition_consumers,
     )
 
+    assert "Window" not in _plan(spark, "rec_rfm_segmentation")
     assert not [
-        c for c in _single_partition_consumers(plan)
+        c for c in _single_partition_consumers(_df(spark, "rec_rfm_segmentation"))
         if c.startswith(("Sort", "Window"))
     ]
 
@@ -315,17 +312,39 @@ def test_single_partition_consumer_parser_on_live_plans(spark):
     """The consumer-aware SinglePartition detector must (a) see the
     bounded global sort win_ntile_percent deliberately keeps over its
     O(buckets) offsets, and (b) stay quiet on an ordinary grouped
-    aggregate — pinning the parser against formatted-explain drift
-    (the literal 'Exchange SinglePartition' match it replaced had
-    gone dead exactly that way)."""
+    aggregate — pinning the plan-object check against Spark drift (the
+    literal 'Exchange SinglePartition' text match it replaced had gone
+    dead exactly that way)."""
     from movierecommender_sentimentanalysissytem_spark.plans.audit import (
         _single_partition_consumers,
     )
 
-    ntile = _single_partition_consumers(_plan(spark, "win_ntile_percent"))
+    ntile = _single_partition_consumers(_df(spark, "win_ntile_percent"))
     assert any(c.startswith(("Sort", "Window")) for c in ntile)
-    grouped = _single_partition_consumers(_plan(spark, "agg_groupby"))
+    grouped = _single_partition_consumers(_df(spark, "agg_groupby"))
     assert not [c for c in grouped if c.startswith(("Sort", "Window"))]
+
+
+def test_single_partition_consumer_sees_through_codegen(spark):
+    """Without AQE a global window's exchange sits under the Sort's
+    WholeStageCodegen and InputAdapter. The walk passes through both,
+    as formatted explain does: the consumer is the Sort."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from movierecommender_sentimentanalysissytem_spark.plans.audit import (
+        _single_partition_consumers,
+    )
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        df = spark.range(100).withColumn(
+            "r", F.row_number().over(Window.orderBy("id"))
+        )
+        assert _single_partition_consumers(df) == ["Sort"]
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
 
 def test_grid_proximity_join_is_hash_equi_join(spark):
@@ -365,11 +384,7 @@ def test_batch_scoring_is_narrow_map(spark):
 def test_expectation_suite_single_scan(spark):
     """All five DQ rules must fold into ONE pass over the fact table —
     exactly one parquet scan in the plan."""
-    plan = _plan(spark, "quality_expectation_suite")
-    # count scans in the tree section only (the detail blocks repeat
-    # each node name once more)
-    tree = plan.split("\n\n")[0]
-    assert tree.count("Scan parquet") == 1
+    assert fingerprint(_df(spark, "quality_expectation_suite"))["Scan parquet"] == 1
 
 
 def test_dau_rolling_semi_join_broadcasts_day_spine(spark):
@@ -438,23 +453,9 @@ def test_python_node_rule_on_synthetic_and_live_plans(spark):
         python_nodes,
     )
 
-    plan = """== Physical Plan ==
-AdaptiveSparkPlan (6)
-+- Project (5)
-   +- BatchEvalPythonUDTF (4)
-      +- ArrowEvalPython (3)
-         +- MapInPandas (2)
-            +- Scan parquet  (1)
-
-(4) BatchEvalPythonUDTF
-Arguments: [MapInPandas]
-"""
-    assert python_nodes(plan) == [
-        "BatchEvalPythonUDTF", "ArrowEvalPython", "MapInPandas"
-    ]
     assert not PYTHON_OK - set(QS)
-    assert python_nodes(_plan(spark, "udf_python_scalar")) == ["BatchEvalPython"]
-    assert python_nodes(_plan(spark, "text_lexicon_sentiment")) == []
+    assert python_nodes(_df(spark, "udf_python_scalar")) == ["BatchEvalPython"]
+    assert python_nodes(_df(spark, "text_lexicon_sentiment")) == []
 
 
 def _physical(spark, key: str) -> str:
