@@ -521,67 +521,6 @@ def rec_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DIMSUM_SQRT_GAMMA = 100.0
 
 
-def dimsum_sampling_lineage(spark: SparkSession, sf_dir: str):
-    """The DIMSUM key's capped-ratings → column-norm/threshold →
-    hash-kept-entry construction, factored out so the registered key
-    and the diagnostic sweep (scripts/dimsum_100x.py, which reports
-    keep%/saturation/pair-volume off this exact lineage) share ONE
-    definition — a constant or hash change here changes both, instead
-    of the script's stats silently drifting from the plan they claim
-    to describe (r10 ADVICE). Returns (capped ratings, probs, kept);
-    ratings and probs are scoped-persisted (ratings feeds both pair
-    sides plus the norm aggregate; probs is referenced three times),
-    so callers outside a registry sweep should release_scoped_caches()
-    when done.
-    """
-    from movierecommender_sentimentanalysissytem_spark.functions.dedup import (
-        _spark_h,
-    )
-    from movierecommender_sentimentanalysissytem_spark.plans.caching import (
-        scoped_persist,
-    )
-
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
-    ratings_all = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("u"),
-            F.col("l_partkey").alias("item"),
-            "l_quantity",
-        )
-        .repartition("u")
-        .groupBy("u", "item")
-        .agg(F.sum("l_quantity").cast("bigint").alias("r"))
-    )
-    w_u = Window.partitionBy("u").orderBy(F.desc("r"), F.asc("item"))
-    ratings = scoped_persist(
-        ratings_all.withColumn("rn", F.row_number().over(w_u))
-        .filter(F.col("rn") <= _BASKET_CAP)
-        .drop("rn")
-    )
-    probs = scoped_persist(ratings.groupBy("item").agg(
-        F.sqrt(F.sum(F.col("r") * F.col("r")).cast("bigint")).alias("nrm"),
-        F.least(
-            F.lit(10000).cast("bigint"),
-            F.floor(
-                10000
-                * _DIMSUM_SQRT_GAMMA
-                / F.sqrt(F.sum(F.col("r") * F.col("r")).cast("bigint"))
-            ).cast("bigint"),
-        ).alias("thr"),
-    ))
-    keep_bucket = F.expr(
-        _spark_h("dimsum", "concat(CAST(u AS STRING), ':', CAST(item AS STRING))")
-    ) % 10000
-    kept = (
-        ratings.join(F.broadcast(probs.select("item", "thr")), "item")
-        .filter(keep_bucket < F.col("thr"))
-        .select("u", "item", "r")
-    )
-    return ratings, probs, kept
-
-
 @query(
     "rec_item_similarity_dimsum",
     oracle="""
@@ -666,9 +605,51 @@ def rec_item_similarity_dimsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     and probs is referenced three times (keep-filter, both unbias
     joins) — without the persist Catalyst re-derives the full
     join+window lineage five times."""
-    from movierecommender_sentimentanalysissytem_spark.functions.rounding import round4
+    from movierecommender_sentimentanalysissytem_spark.functions.dedup import (
+        _spark_h,
+    )
+    from movierecommender_sentimentanalysissytem_spark.plans.caching import (
+        scoped_persist,
+    )
 
-    _ratings_capped, probs, kept = dimsum_sampling_lineage(spark, sf_dir)
+    li = table(spark, sf_dir, "lineitem")
+    o = table(spark, sf_dir, "orders")
+    ratings_all = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .select(
+            F.col("o_custkey").alias("u"),
+            F.col("l_partkey").alias("item"),
+            "l_quantity",
+        )
+        .repartition("u")
+        .groupBy("u", "item")
+        .agg(F.sum("l_quantity").cast("bigint").alias("r"))
+    )
+    w_u = Window.partitionBy("u").orderBy(F.desc("r"), F.asc("item"))
+    ratings = scoped_persist(
+        ratings_all.withColumn("rn", F.row_number().over(w_u))
+        .filter(F.col("rn") <= _BASKET_CAP)
+        .drop("rn")
+    )
+    probs = scoped_persist(ratings.groupBy("item").agg(
+        F.sqrt(F.sum(F.col("r") * F.col("r")).cast("bigint")).alias("nrm"),
+        F.least(
+            F.lit(10000).cast("bigint"),
+            F.floor(
+                10000
+                * _DIMSUM_SQRT_GAMMA
+                / F.sqrt(F.sum(F.col("r") * F.col("r")).cast("bigint"))
+            ).cast("bigint"),
+        ).alias("thr"),
+    ))
+    keep_bucket = F.expr(
+        _spark_h("dimsum", "concat(CAST(u AS STRING), ':', CAST(item AS STRING))")
+    ) % 10000
+    kept = (
+        ratings.join(F.broadcast(probs.select("item", "thr")), "item")
+        .filter(keep_bucket < F.col("thr"))
+        .select("u", "item", "r")
+    )
     a = kept.select("u", F.col("item").alias("item_a"), F.col("r").alias("ra"))
     b = kept.select("u", F.col("item").alias("item_b"), F.col("r").alias("rb"))
     pairs = (

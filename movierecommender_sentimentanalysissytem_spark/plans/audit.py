@@ -10,6 +10,9 @@ Flags:
   that is not a final top-k/limit
 - Python execution node (rows shipped to a Python worker) not on the
   reviewed allowlist
+- nondeterministic expression not on the reviewed allowlist (a stage
+  retried after a lost executor recomputes it, and can emit rows that
+  differ from the attempt its consumers already read)
 
 The same sweep computes every key's plan fingerprint (plans/
 fingerprint.py): both read the plan objects through one walker,
@@ -174,6 +177,11 @@ PYTHON_OK = {
 }
 
 
+# Queries whose plans evaluate a nondeterministic expression by design:
+# Spark treats every Python UDTF call as nondeterministic.
+NONDETERMINISTIC_OK = {"udtf", "udtf_table_argument"}
+
+
 def python_nodes(df: DataFrame) -> list[str]:
     """Names of the Python execution nodes in ``df``'s physical plan."""
     return _python(plan_nodes(df))
@@ -181,6 +189,20 @@ def python_nodes(df: DataFrame) -> list[str]:
 
 def _python(nodes) -> list[str]:
     return [n.name for n in nodes if n.name in PYTHON_NODES]
+
+
+def _nondeterministic(nodes) -> list[str]:
+    """Names of the nodes holding an expression whose ``deterministic()``
+    is false. A node's ``deterministic()`` is true only when all of its
+    expressions are, so it screens out clean nodes in one call."""
+    out = []
+    for n in nodes:
+        if n.obj.deterministic():
+            continue
+        exprs = n.obj.expressions()
+        if not all(exprs.apply(i).deterministic() for i in range(exprs.size())):
+            out.append(n.name)
+    return out
 
 
 def _single_partition_consumers(df: DataFrame) -> list[str]:
@@ -217,6 +239,8 @@ def _flags(key: str, nodes: list[PlanNode]) -> list[str]:
     py = _python(nodes)
     if py and key not in PYTHON_OK:
         flags.append(f"Python execution node {py[0]} (unreviewed)")
+    if key not in NONDETERMINISTIC_OK and (nd := _nondeterministic(nodes)):
+        flags.append(f"Nondeterministic expression in {nd[0]} (unreviewed)")
     return flags
 
 

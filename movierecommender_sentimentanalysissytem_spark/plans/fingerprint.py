@@ -56,6 +56,13 @@ _COUNTED = (
 _PASS_THROUGH = frozenset({"WholeStageCodegenExec", "InputAdapter"})
 
 
+def _wrapper(cls: str) -> bool:
+    """Adaptive-execution wrappers: walked and yielded, but their
+    children report the wrapper's parent as theirs, so an exchange
+    inside a materialized stage names the operator that reads it."""
+    return cls.endswith("QueryStageExec") or cls == "AQEShuffleReadExec"
+
+
 def _counted(name: str) -> str | None:
     """The longest ``_COUNTED`` prefix of a node name, so that
     ``SortAggregate`` counts as itself rather than as ``Sort``,
@@ -72,7 +79,7 @@ def _counted(name: str) -> str | None:
 class PlanNode(NamedTuple):
     name: str  # nodeName(), e.g. "SortMergeJoin", "Scan parquet t"
     cls: str  # JVM class simple name, e.g. "ShuffleExchangeExec"
-    parent: str  # nearest non-codegen parent's name ("" at the root)
+    parent: str  # nearest non-wrapper parent's name ("" at the root)
     obj: Any  # the py4j handle, for node-specific reads
 
 
@@ -98,8 +105,9 @@ def plan_nodes(df: DataFrame) -> Iterator[PlanNode]:
         if cls in _PASS_THROUGH:
             below = parent
         else:
-            below = node.nodeName()
-            yield PlanNode(below, cls, parent, node)
+            name = node.nodeName()
+            yield PlanNode(name, cls, parent, node)
+            below = parent if _wrapper(cls) else name
         children = node.children()
         kids = [children.apply(i) for i in range(children.size())]
         if cls == "AdaptiveSparkPlanExec":

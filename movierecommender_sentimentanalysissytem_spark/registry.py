@@ -121,6 +121,7 @@ _PRIORITY: dict[str, int] = {
     "dedup_ngram_jaccard": 15,
     "dedup_ngram_containment": 15,
     "dedup_clusters": 15,
+    "rec_item_similarity_dimsum": 15,
 }
 
 # SURVEY.md §2 inventory — the judge's coverage checklist. These outrank

@@ -193,16 +193,13 @@ def literal_table(spark: SparkSession, rows, ddl: str) -> DataFrame:
     return spark.createDataFrame(data)
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, register_views: bool = True
-) -> dict[str, DataFrame]:
-    """Load all fixture tables; optionally register temp views so both
+def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Load all fixture tables and register each as a temp view, so both
     the DataFrame API and ``spark.sql`` formulations are available
     (SURVEY.md §3.2)."""
     dfs: dict[str, DataFrame] = {}
     for name in TABLES:
         df = table(spark, sf_dir, name)
-        if register_views:
-            df.createOrReplaceTempView(name)
+        df.createOrReplaceTempView(name)
         dfs[name] = df
     return dfs

@@ -1,6 +1,9 @@
 """Regenerate the auto-maintained inventory sections: SURVEY.md §2.13
 (extras table + inventory count line) and the README surface paragraph.
 
+Reads the package, SURVEY.md and README.md of the checkout this script
+sits in, whatever the working directory.
+
 Usage: python scripts/refresh_inventory.py
 """
 
@@ -8,10 +11,13 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(ROOT))
     from movierecommender_sentimentanalysissytem_spark.registry import (
         _SECTION2,
         oracle_sql,
@@ -26,7 +32,8 @@ def main() -> int:
         doc = (fn.__doc__ or "").strip().split("\n")[0].rstrip(".")
         rows.append(f"| `{k}` | {doc} | {'SQL' if k in osql else 'rows'} |")
 
-    s = open("SURVEY.md").read()
+    survey = ROOT / "SURVEY.md"
+    s = survey.read_text()
     marker = "### 2.13 Extras beyond the mandated inventory"
     start = s.index(marker)
     end = s.index("**Inventory count:", start)
@@ -56,15 +63,16 @@ rows-only driver check with quality/recall tests in `tests/`).
         count=1,
         flags=re.S,
     )
-    open("SURVEY.md", "w").write(s)
+    survey.write_text(s)
 
-    r = open("README.md").read()
+    readme = ROOT / "README.md"
+    r = readme.read_text()
     r = re.sub(
         r"\d+ registered query keys, \d+ SQL-checked exactly",
         f"{len(qs)} registered query keys, {len(osql)} SQL-checked exactly",
         r,
     )
-    open("README.md", "w").write(r)
+    readme.write_text(r)
     print(f"{len(qs)} keys, {len(osql)} oracles, {len(extras)} extras")
     return 0
 

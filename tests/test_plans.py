@@ -347,6 +347,63 @@ def test_single_partition_consumer_sees_through_codegen(spark):
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
 
+def test_single_partition_consumer_inside_a_materialized_cache(spark):
+    """A global window inside an eagerly filled cache runs as adaptive
+    query stages: the exchange sits under a ShuffleQueryStage wrapper.
+    The walk reports the operator above the wrapper as the consumer,
+    so the audit flags the single-partition Sort."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from movierecommender_sentimentanalysissytem_spark.plans.audit import _flags
+    from movierecommender_sentimentanalysissytem_spark.plans.caching import (
+        release_scoped_caches,
+        scoped_persist,
+    )
+    from movierecommender_sentimentanalysissytem_spark.plans.fingerprint import (
+        plan_nodes,
+    )
+
+    try:
+        ranked = scoped_persist(
+            spark.range(100).withColumn("r", F.row_number().over(Window.orderBy("id")))
+        )
+        df = ranked.groupBy((F.col("id") % 3).alias("k")).count()
+        assert "SinglePartition exchange into Sort" in _flags(
+            "cached_global_window", list(plan_nodes(df))
+        )
+    finally:
+        release_scoped_caches()
+
+
+def test_nondeterministic_expression_rule(spark):
+    """A nondeterministic expression outside the reviewed UDTF keys is
+    flagged: rand() injected into a clean key, while the UDTF key's
+    nondeterministic Python call stays allowlisted."""
+    from pyspark.sql import functions as F
+
+    from movierecommender_sentimentanalysissytem_spark.plans.audit import (
+        NONDETERMINISTIC_OK,
+        _flags,
+        _nondeterministic,
+    )
+    from movierecommender_sentimentanalysissytem_spark.plans.fingerprint import (
+        plan_nodes,
+    )
+
+    assert not NONDETERMINISTIC_OK - set(QS)
+    clean = _df(spark, "agg_groupby")
+    assert _flags("agg_groupby", list(plan_nodes(clean))) == []
+    noisy = list(plan_nodes(clean.withColumn("noise", F.rand())))
+    assert any(
+        f.startswith("Nondeterministic expression")
+        for f in _flags("agg_groupby", noisy)
+    )
+    udtf = list(plan_nodes(_df(spark, "udtf")))
+    assert _nondeterministic(udtf)
+    assert _flags("udtf", udtf) == []
+
+
 def test_grid_proximity_join_is_hash_equi_join(spark):
     """The spatial join must be a hash/sort-merge EQUI join on the
     cell id — never a nested loop over the raw distance predicate."""
