@@ -1,6 +1,6 @@
-"""Static plan audit (SURVEY.md §7 phase 8): walk every registered
-query's physical plan and flag pathologies that would not survive a
-100× scale-up.
+"""Static plan audit (SURVEY.md §7 phase 8): build every registered
+query once, walk its physical plan and flag what would not survive a
+100× scale-up or the driver's correctness check.
 
 Flags:
 - CartesianProduct anywhere
@@ -13,17 +13,20 @@ Flags:
 - nondeterministic expression not on the reviewed allowlist (a stage
   retried after a lost executor recomputes it, and can emit rows that
   differ from the attempt its consumers already read)
+- an allowlist entry whose rule did not fire (a stale exemption would
+  hide the next regression of that key)
+- a non-atomic output column on a key with an oracle
 
 The same sweep computes every key's plan fingerprint (plans/
 fingerprint.py): both read the plan objects through one walker,
-``plan_nodes``.
-
-CLI: ``python scripts/plan_fingerprints.py [sf_dir]``.
+``plan_nodes``. The pytest gate (tests/test_plan_fingerprints.py) and
+``python scripts/plan_fingerprints.py [sf_dir]`` both run it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
+from pyspark.sql.types import ArrayType, BinaryType, MapType, StructType
 
 from movierecommender_sentimentanalysissytem_spark.plans.fingerprint import (
     PlanNode,
@@ -31,19 +34,19 @@ from movierecommender_sentimentanalysissytem_spark.plans.fingerprint import (
     tally,
 )
 
-# Streaming/ML keys build their plan lazily or run jobs at build time —
-# excluded from the static audit (covered by their own tests).
+# Keys whose plans MLlib builds: each has a flagged shape the engine
+# cannot change, so the audit does not build them (their own tests in
+# tests/test_ml_quality.py cover them). Both are rows-only, so the
+# output-type rule loses nothing.
 SKIP = {
-    "stream_watermark_late",
-    "stream_dedup",
-    "stream_stateful_counter",
-    "ml_sentiment_pipeline",
+    # CartesianProduct: recommendForAllUsers' blocked cross product of
+    # user and item factor blocks (ml/pipelines.py:13)
     "ml_als_recommend",
-    "sim_threshold_join_lsh",
-    "sim_topk_ivf",
-    "scan_csv",
-    "scan_json",
-    "sink_parquet",
+    # Nondeterministic expression in a Project: VectorAssembler's
+    # assembling UDF, which MLlib marks nondeterministic
+    # (``UDF(struct(idf1, ..., idf2, ...)) AS features``). The values are
+    # deterministic, as the key's docstring says; Spark cannot know it.
+    "ml_sentiment_pipeline",
 }
 
 # Queries where a nested-loop broadcast is the intended plan (bounded
@@ -52,7 +55,6 @@ NLJ_OK = {
     "join_cross",          # 5 × 25 literal dims
     "sim_topk_neighbors",  # 10-row query block broadcast
     "sim_threshold_join",  # vec_id < vec_id band on one table
-    "dedup_near_minhash",   # doc_id < doc_id on band-collided pairs
     "multimodal_columns",   # 1-row query vector cross join
     "win_ntile_percent",    # two-pass rank: the only SinglePartition is
                             # the per-partition-counts offset window
@@ -94,7 +96,6 @@ NLJ_OK = {
     "quality_control_chart",    # 1-row centerline broadcast cross
     "stats_anova_oneway",       # 1-row grand-moments broadcast cross
     "text_collocation_llr",     # 1-row bigram-total broadcast cross
-    "text_zipf_fit",            # rank window over the O(vocab) rollup
     "agg_share_of_parent",      # 1-row grand-total broadcast; parent
                                 # window over the O(nations) rollup
     "quality_fk_matrix",        # seven 1-row × 1-row report crosses
@@ -182,12 +183,17 @@ PYTHON_OK = {
 NONDETERMINISTIC_OK = {"udtf", "udtf_table_argument"}
 
 
-def python_nodes(df: DataFrame) -> list[str]:
-    """Names of the Python execution nodes in ``df``'s physical plan."""
-    return _python(plan_nodes(df))
+# The driver hashes every oracle key's result cells after sorting them.
+# Its pandas canonicalizer crashes on list cells (``TypeError:
+# unhashable type: 'list'``: fn_array_setops, CORRECTNESS_r05.json), and
+# struct cells (Row objects) and raw binary break the same sort. A key
+# with an oracle must project composites as scalar encodings (the
+# agg_collect ``concat_ws('|', sort_array(...))`` idiom), never raw.
+_COMPOSITE = (ArrayType, MapType, StructType, BinaryType)
 
 
 def _python(nodes) -> list[str]:
+    """Names of the Python execution nodes among ``nodes``."""
     return [n.name for n in nodes if n.name in PYTHON_NODES]
 
 
@@ -205,13 +211,9 @@ def _nondeterministic(nodes) -> list[str]:
     return out
 
 
-def _single_partition_consumers(df: DataFrame) -> list[str]:
-    """Names of the plan nodes that directly consume a SinglePartition
-    shuffle exchange in ``df``'s physical plan."""
-    return _consumers(plan_nodes(df))
-
-
 def _consumers(nodes) -> list[str]:
+    """Names of the plan nodes that directly consume a SinglePartition
+    shuffle exchange."""
     return [
         n.parent
         for n in nodes
@@ -221,47 +223,65 @@ def _consumers(nodes) -> list[str]:
     ]
 
 
-def _flags(key: str, nodes: list[PlanNode]) -> list[str]:
+def _flags(
+    key: str, nodes: list[PlanNode], schema: StructType | None = None
+) -> list[str]:
+    """The audit's flags for ``key``'s walked plan. ``schema`` is the
+    key's output schema when it has an oracle, else None."""
     names = {n.name for n in nodes}
-    flags = []
-    if "CartesianProduct" in names:
-        flags.append("CartesianProduct")
-    if "BroadcastNestedLoopJoin" in names and key not in NLJ_OK:
-        flags.append("BroadcastNestedLoopJoin (unreviewed)")
+    nested = []
+    if "BroadcastNestedLoopJoin" in names:
+        nested.append("BroadcastNestedLoopJoin (unreviewed)")
     # A single-partition exchange is only a cliff when a global
     # SORT/WINDOW consumes it — every global aggregate legitimately
     # funnels its per-partition partials through one.
-    if key not in NLJ_OK:
-        for consumer in _consumers(nodes):
-            if consumer.startswith(("Sort", "Window")):
-                flags.append(f"SinglePartition exchange into {consumer}")
-                break
-    py = _python(nodes)
-    if py and key not in PYTHON_OK:
-        flags.append(f"Python execution node {py[0]} (unreviewed)")
-    if key not in NONDETERMINISTIC_OK and (nd := _nondeterministic(nodes)):
-        flags.append(f"Nondeterministic expression in {nd[0]} (unreviewed)")
+    for consumer in _consumers(nodes):
+        if consumer.startswith(("Sort", "Window")):
+            nested.append(f"SinglePartition exchange into {consumer}")
+            break
+    python = [f"Python execution node {n} (unreviewed)" for n in _python(nodes)[:1]]
+    nondet = [
+        f"Nondeterministic expression in {n} (unreviewed)"
+        for n in _nondeterministic(nodes)[:1]
+    ]
+    flags = ["CartesianProduct"] if "CartesianProduct" in names else []
+    for allowlist, name, found in (
+        (NLJ_OK, "NLJ_OK", nested),
+        (PYTHON_OK, "PYTHON_OK", python),
+        (NONDETERMINISTIC_OK, "NONDETERMINISTIC_OK", nondet),
+    ):
+        if key not in allowlist:
+            flags += found
+        elif not found:
+            flags.append(f"stale {name} entry (its rule did not fire)")
+    if schema is not None:
+        flags += [
+            f"non-atomic output column {f.name} ({f.dataType.typeName()})"
+            for f in schema.fields
+            if isinstance(f.dataType, _COMPOSITE)
+        ]
     return flags
 
 
 def audit_plans(
-    spark: SparkSession, sf_dir: str, keys=None
+    spark: SparkSession, sf_dir: str
 ) -> tuple[dict[str, dict[str, int]], list[str]]:
-    """Build and walk every non-skipped registered query (or only those
-    in ``keys``). Returns each key's fingerprint (``{"__error__": ...}``
-    when its build or walk failed) and the audit's flag strings (empty
-    list = clean)."""
+    """Build and walk every registered query outside ``SKIP``. Returns
+    each key's fingerprint (``{"__error__": ...}`` when its build or walk
+    failed) and the audit's flag strings (empty list = clean)."""
     from movierecommender_sentimentanalysissytem_spark import registry
 
     qs = registry.queries()
+    oracles = registry.oracle_sql()
     fingerprints: dict[str, dict[str, int]] = {}
     flags_out: list[str] = []
     for key in sorted(qs):
-        if key in SKIP or (keys is not None and key not in keys):
+        if key in SKIP:
             continue
         try:
-            nodes = list(plan_nodes(qs[key](spark, sf_dir)))
-            flags = _flags(key, nodes)
+            df = qs[key](spark, sf_dir)
+            nodes = list(plan_nodes(df))
+            flags = _flags(key, nodes, df.schema if key in oracles else None)
         except Exception as exc:  # noqa: BLE001
             fingerprints[key] = {"__error__": str(exc)[:80]}
             continue

@@ -1,15 +1,15 @@
 """One sweep over every registered query's physical plan: regenerate
 PLAN_FINGERPRINTS.json and run the static plan audit.
 
-Each non-skipped key is built once and its plan objects walked once
-(``plans/fingerprint.plan_nodes``); the walk gives both the key's
-fingerprint and its audit flags (``plans/audit.py``). The snapshot is
-the plan-shape baseline every key is diffed against
-(tests/test_plan_fingerprints.py checks a representative subset on
-every pytest run): run this after an intentional plan change and
-commit the JSON diff — the diff IS the review artifact. Prints one
-``FLAG`` line per flagged key and exits non-zero on any build error or
-audit flag.
+Each key outside ``plans/audit.SKIP`` is built once and its plan
+objects walked once (``plans/fingerprint.plan_nodes``); the walk gives
+both the key's fingerprint and its audit flags (``plans/audit.py``).
+The snapshot is the plan-shape baseline every key is diffed against:
+tests/test_plan_fingerprints.py runs the same sweep in the pytest gate
+and checks every stored fingerprint, the key set and the flags. Run
+this after an intentional plan change and commit the JSON diff — the
+diff IS the review artifact. Prints one ``FLAG`` line per flagged key
+and exits non-zero on any build error or audit flag.
 
 Usage: python scripts/plan_fingerprints.py [sf_dir]
 """

@@ -1,8 +1,10 @@
-"""Plan-shape snapshot diff (PLAN_FINGERPRINTS.json): relative plan
+"""Plan-shape snapshot diff (PLAN_FINGERPRINTS.json) and the static
+plan audit, from one sweep over the registry: relative plan
 regressions — a broadcast degrading to sort-merge, an extra exchange,
 a duplicated scan — stay legal for the static audit but multiply cost
-at 100 TB. Every key's strategy-level fingerprint is committed; this
-test re-derives a representative subset live and diffs.
+at 100 TB. Every key's strategy-level fingerprint is committed; the
+sweep (``plans/audit.audit_plans``) builds each key once, re-derives
+every fingerprint live and diffs, and checks the audit's flags.
 
 After an INTENTIONAL plan change: `python scripts/plan_fingerprints.py`
 and commit the JSON diff — the diff is the review artifact.
@@ -15,7 +17,11 @@ from pathlib import Path
 
 import pytest
 
-from movierecommender_sentimentanalysissytem_spark.plans.audit import audit_plans
+from movierecommender_sentimentanalysissytem_spark import registry
+from movierecommender_sentimentanalysissytem_spark.plans.audit import (
+    SKIP,
+    audit_plans,
+)
 from movierecommender_sentimentanalysissytem_spark.plans.fingerprint import (
     _counted,
 )
@@ -25,77 +31,41 @@ STORED = json.loads(
     (Path(__file__).resolve().parents[1] / "PLAN_FINGERPRINTS.json").read_text()
 )
 
-# Strategy-bearing representatives: every join algorithm, the cached /
-# broadcast / window / explode shapes, the scale-critical rewrites, and
-# the bench headline set.
-SUBSET = [
-    "join_broadcast",
-    "join_star_multiway",
-    "join_inner_equi",
-    "join_left_anti",
-    "join_range_binned",
-    "join_interval_overlap",
-    "join_asof",
-    "join_bucketed_colocated",
-    "join_temporal_snapshot",
-    "join_fuzzy_levenshtein",
-    "geo_grid_proximity_join",
-    "join_dynamic_partition_pruning",
-    "maintenance_snapshot_diff",
-    "agg_groupby",
-    "agg_skew_salted",
-    "agg_grouping_sets",
-    "win_row_number_topk",
-    "win_ntile_percent",
-    "win_running_sum",
-    "sort_multikey",
-    "dedup_exact",
-    "dedup_near_minhash",
-    "dedup_ngram_jaccard",
-    "sim_cosine_pairwise",
-    "sim_topk_neighbors",
-    "text_tfidf",
-    "text_keyword_cooccurrence",
-    "ml_batch_scoring",
-    "ml_feature_scaling",
-    "ml_eval_rmse",
-    "rec_item_similarity",
-    # caches nested in caches: each cached operator counts once
-    "rec_association_rules",
-    "rec_multihop_expansion",
-    "graph_triangle_count",
-    "quality_benford_digits",
-    "quality_expectation_suite",
-    "embedding_random_projection",
-    "events_dau_rolling",
-    "sessionize_batch",
-    "curation_chunk_overlap",
-    "stream_tumbling_window",
-    "stream_windowed_topk",
-    "join_hint_shuffle_hash",
-    "ml_kmeans_lloyd",
-    "stats_kaplan_meier",
-]
-
-
-def test_subset_is_covered_by_snapshot():
-    missing = [k for k in SUBSET if k not in STORED]
-    assert not missing, f"regenerate PLAN_FINGERPRINTS.json: {missing}"
-
 
 @pytest.fixture(scope="module")
-def live(spark):
-    return audit_plans(spark, SF_SMALL, keys=set(SUBSET))[0]
+def sweep(spark):
+    return audit_plans(spark, SF_SMALL)
 
 
-@pytest.mark.parametrize("key", SUBSET)
-def test_plan_fingerprint_unchanged(live, key):
-    assert live[key] == STORED[key], (
+@pytest.mark.slow
+def test_sweep_covers_the_snapshot(sweep):
+    """Every key outside SKIP builds, and the snapshot holds exactly
+    those keys. SKIP keys are rows-only, so the sweep's output-type
+    rule reaches every key with an oracle."""
+    live = sweep[0]
+    errors = {k: v["__error__"] for k, v in live.items() if "__error__" in v}
+    assert not errors, errors
+    assert set(live) == set(STORED), (
+        f"regenerate PLAN_FINGERPRINTS.json: {sorted(set(live) ^ set(STORED))}"
+    )
+    assert not SKIP & set(registry.oracle_sql())
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("key", sorted(STORED))
+def test_plan_fingerprint_unchanged(sweep, key):
+    live = sweep[0]
+    assert live.get(key) == STORED[key], (
         f"{key}: plan shape drifted.\n  stored: {STORED[key]}\n  "
-        f"live:   {live[key]}\nIf intentional, regenerate "
+        f"live:   {live.get(key)}\nIf intentional, regenerate "
         f"PLAN_FINGERPRINTS.json (scripts/plan_fingerprints.py) and "
         f"commit the diff."
     )
+
+
+@pytest.mark.slow
+def test_audit_flags_nothing(sweep):
+    assert not sweep[1], "\n".join(sweep[1])
 
 
 def test_fingerprint_counts_longest_prefix():

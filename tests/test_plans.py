@@ -6,7 +6,10 @@ from __future__ import annotations
 import pytest
 
 from movierecommender_sentimentanalysissytem_spark import registry
-from movierecommender_sentimentanalysissytem_spark.plans.fingerprint import fingerprint
+from movierecommender_sentimentanalysissytem_spark.plans.fingerprint import (
+    fingerprint,
+    plan_nodes,
+)
 from perfbench.probes import SparkProbes
 from tests.conftest import SF_ORACLE, SF_SMALL
 
@@ -297,13 +300,11 @@ def test_rfm_quartiles_avoid_global_window(spark):
     """RFM must bucket via the broadcast threshold table — a global
     ntile window over every user is the single-task cliff this
     formulation exists to avoid."""
-    from movierecommender_sentimentanalysissytem_spark.plans.audit import (
-        _single_partition_consumers,
-    )
+    from movierecommender_sentimentanalysissytem_spark.plans.audit import _consumers
 
     assert "Window" not in _plan(spark, "rec_rfm_segmentation")
     assert not [
-        c for c in _single_partition_consumers(_df(spark, "rec_rfm_segmentation"))
+        c for c in _consumers(plan_nodes(_df(spark, "rec_rfm_segmentation")))
         if c.startswith(("Sort", "Window"))
     ]
 
@@ -315,13 +316,11 @@ def test_single_partition_consumer_parser_on_live_plans(spark):
     aggregate — pinning the plan-object check against Spark drift (the
     literal 'Exchange SinglePartition' text match it replaced had gone
     dead exactly that way)."""
-    from movierecommender_sentimentanalysissytem_spark.plans.audit import (
-        _single_partition_consumers,
-    )
+    from movierecommender_sentimentanalysissytem_spark.plans.audit import _consumers
 
-    ntile = _single_partition_consumers(_df(spark, "win_ntile_percent"))
+    ntile = _consumers(plan_nodes(_df(spark, "win_ntile_percent")))
     assert any(c.startswith(("Sort", "Window")) for c in ntile)
-    grouped = _single_partition_consumers(_df(spark, "agg_groupby"))
+    grouped = _consumers(plan_nodes(_df(spark, "agg_groupby")))
     assert not [c for c in grouped if c.startswith(("Sort", "Window"))]
 
 
@@ -332,9 +331,7 @@ def test_single_partition_consumer_sees_through_codegen(spark):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from movierecommender_sentimentanalysissytem_spark.plans.audit import (
-        _single_partition_consumers,
-    )
+    from movierecommender_sentimentanalysissytem_spark.plans.audit import _consumers
 
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -342,7 +339,7 @@ def test_single_partition_consumer_sees_through_codegen(spark):
         df = spark.range(100).withColumn(
             "r", F.row_number().over(Window.orderBy("id"))
         )
-        assert _single_partition_consumers(df) == ["Sort"]
+        assert _consumers(plan_nodes(df)) == ["Sort"]
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
@@ -383,15 +380,10 @@ def test_nondeterministic_expression_rule(spark):
     from pyspark.sql import functions as F
 
     from movierecommender_sentimentanalysissytem_spark.plans.audit import (
-        NONDETERMINISTIC_OK,
         _flags,
         _nondeterministic,
     )
-    from movierecommender_sentimentanalysissytem_spark.plans.fingerprint import (
-        plan_nodes,
-    )
 
-    assert not NONDETERMINISTIC_OK - set(QS)
     clean = _df(spark, "agg_groupby")
     assert _flags("agg_groupby", list(plan_nodes(clean))) == []
     noisy = list(plan_nodes(clean.withColumn("noise", F.rand())))
@@ -504,15 +496,50 @@ def test_literal_tables_plan_as_local_scans(spark, key):
 
 def test_python_node_rule_on_synthetic_and_live_plans(spark):
     """The audit's Python-execution rule must find the worker nodes by
-    exact name, and every allowlisted key must exist."""
-    from movierecommender_sentimentanalysissytem_spark.plans.audit import (
-        PYTHON_OK,
-        python_nodes,
-    )
+    exact name."""
+    from movierecommender_sentimentanalysissytem_spark.plans.audit import _python
 
-    assert not PYTHON_OK - set(QS)
-    assert python_nodes(_df(spark, "udf_python_scalar")) == ["BatchEvalPython"]
-    assert python_nodes(_df(spark, "text_lexicon_sentiment")) == []
+    assert _python(plan_nodes(_df(spark, "udf_python_scalar"))) == ["BatchEvalPython"]
+    assert _python(plan_nodes(_df(spark, "text_lexicon_sentiment"))) == []
+
+
+@pytest.mark.parametrize("allowlist", ["NLJ_OK", "PYTHON_OK", "NONDETERMINISTIC_OK"])
+def test_stale_allowlist_entry_is_flagged(spark, monkeypatch, allowlist):
+    """An allowlist entry whose rule does not fire on the key's plan is
+    flagged: agg_groupby has no nested loop, single-partition sort,
+    Python node or nondeterministic expression to exempt."""
+    from movierecommender_sentimentanalysissytem_spark.plans import audit
+
+    monkeypatch.setattr(audit, allowlist, getattr(audit, allowlist) | {"agg_groupby"})
+    nodes = list(plan_nodes(_df(spark, "agg_groupby")))
+    assert audit._flags("agg_groupby", nodes) == [
+        f"stale {allowlist} entry (its rule did not fire)"
+    ]
+
+
+@pytest.mark.parametrize("encode", [False, True], ids=["array", "concat_ws"])
+def test_output_type_rule_flags_raw_composites_on_oracle_keys(
+    spark, monkeypatch, encode
+):
+    """The driver's canonicalizer crashes on list cells: the sweep flags
+    an oracle key that outputs a raw array column, and passes the same
+    column encoded with ``concat_ws``."""
+    from pyspark.sql import functions as F
+
+    from movierecommender_sentimentanalysissytem_spark.plans.audit import audit_plans
+
+    build = QS["agg_groupby"]
+
+    def with_tags(spark, sf_dir):
+        tags = F.array(F.lit("a"), F.lit("b"))
+        return build(spark, sf_dir).withColumn(
+            "tags", F.concat_ws("|", tags) if encode else tags
+        )
+
+    monkeypatch.setattr(registry, "queries", lambda: {"agg_groupby": with_tags})
+    flags = audit_plans(spark, SF_SMALL)[1]
+    raw = ["agg_groupby: non-atomic output column tags (array)"]
+    assert flags == ([] if encode else raw)
 
 
 def _physical(spark, key: str) -> str:

@@ -8,6 +8,7 @@ import pytest
 
 import __spark_entry__ as entrymod
 from movierecommender_sentimentanalysissytem_spark import registry
+from movierecommender_sentimentanalysissytem_spark.plans import audit
 
 
 def test_all_oracle_keys_have_queries():
@@ -203,99 +204,49 @@ def test_sweep_budget_skips_the_newest_round_while_staler_keys_wait():
         assert not fresh, f"first 50 re-check round-{newest} keys: {fresh}"
 
 
-@pytest.mark.slow
-def test_no_array_or_map_outputs_on_oracle_keys(spark):
-    """Class guard for the r5 driver-red: the driver's pandas
-    canonicalizer sorts result cells and crashes on list-typed values
-    (``TypeError: unhashable type: 'list'`` — fn_array_setops,
-    CORRECTNESS_r05.json). Struct cells (Row objects) and raw binary
-    break the same sort, so the guard covers every non-atomic type.
-    Any oracle-bearing key must therefore project composites as
-    scalar encodings (the agg_collect ``concat_ws('|',
-    sort_array(...))`` idiom), never raw. Most builders are lazy
-    (schema only, no job), but a handful run eager actions during
-    construction (e.g. dedup_clusters' connected-components loop
-    counts and checkpoints), so the full ~324-key sweep costs ~100 s
-    at sf0.001 — the price of covering the whole driver-crash class
-    with zero exemptions."""
-    from pyspark.sql.types import (
-        ArrayType,
-        BinaryType,
-        MapType,
-        StructType,
-    )
-
-    qs = entrymod.queries()
-    offenders = []
-    for key in entrymod.oracle_sql():
-        schema = qs[key](spark, "/root/testdata/sf0.001").schema
-        bad = [
-            f.name
-            for f in schema.fields
-            if isinstance(
-                f.dataType, (ArrayType, MapType, StructType, BinaryType)
-            )
-        ]
-        if bad:
-            offenders.append((key, bad))
-    assert not offenders, (
-        "oracle-bearing keys with non-atomic output columns "
-        f"(driver canonicalizer crashes on these): {offenders}"
-    )
-
-
-def test_order_sensitive_keys_exist_in_registry():
-    """ORDER_SENSITIVE (the layout smoke's row-count exemption list)
-    must stay tied to the registry: every entry names a registered key
-    (a rename/removal goes red here instead of surfacing as a spurious
-    DIFF in scripts/layout_smoke.py), and every entry has a reason to
-    be exempt — partition-seeded samplers and the corrupt-file scanner
-    are the only layout-dependent families (r9 ADVICE)."""
-    from movierecommender_sentimentanalysissytem_spark.registry import (
-        ORDER_SENSITIVE,
-        queries,
-    )
-
-    unknown = ORDER_SENSITIVE - set(queries())
-    assert not unknown, f"ORDER_SENSITIVE names unregistered keys: {unknown}"
-    assert all(
-        k.startswith(("sample_", "scan_ignore_corrupt"))
-        for k in ORDER_SENSITIVE
-    ), "unexpected family in ORDER_SENSITIVE — document why it is exempt"
-
-
-def test_expensive_tier_keys_exist_in_registry():
-    """_EXPENSIVE (the sweep-budget cost tier: keys measured ≥ ~2 s at
-    sf0.01, sorted after cheap keys within their priority group) must
-    stay tied to the registry exactly like ORDER_SENSITIVE: every entry
-    names a registered key, so a rename/removal goes red here instead
-    of silently de-prioritizing nothing while the real key drifts back
-    into the cheap tier (r10 verdict item 6)."""
-    from movierecommender_sentimentanalysissytem_spark.registry import (
-        _EXPENSIVE,
-        queries,
-    )
-
-    unknown = _EXPENSIVE - set(queries())
-    assert not unknown, f"_EXPENSIVE names unregistered keys: {unknown}"
-    # Every expensive key is one of the documented cost families: model
-    # training, true streaming runs, ANN index builds, iterative graph
-    # plans, the CF/recommender self-joins, connected components, or
-    # the python-datasource round-trips. A new family must be
-    # documented at the constant.
-    families = (
-        "ml_", "stream_", "sim_", "dedup_clusters", "rec_", "graph_",
-        "scan_python_datasource", "sink_python_datasource",
-    )
-    stray = [k for k in _EXPENSIVE if not k.startswith(families)]
-    assert not stray, f"undocumented family in _EXPENSIVE: {stray}"
-
-
-def test_priority_keys_exist_in_registry():
-    """A misspelled or removed _PRIORITY key would silently lead
-    nothing."""
-    unknown = set(registry._PRIORITY) - set(registry.queries())
-    assert not unknown, f"_PRIORITY names unregistered keys: {unknown}"
+@pytest.mark.parametrize(
+    "keys, families",
+    [
+        # layout_smoke's row-count exemptions: partition-seeded samplers
+        # and the corrupt-file scanner are the only layout-dependent
+        # families (r9 ADVICE)
+        pytest.param(
+            registry.ORDER_SENSITIVE,
+            ("sample_", "scan_ignore_corrupt"),
+            id="ORDER_SENSITIVE",
+        ),
+        # the sweep-budget cost tier: model training, true streaming
+        # runs, ANN index builds, iterative graph plans, the
+        # CF/recommender self-joins, connected components, or the
+        # python-datasource round-trips; a new family must be documented
+        # at the constant
+        pytest.param(
+            registry._EXPENSIVE,
+            (
+                "ml_", "stream_", "sim_", "dedup_clusters", "rec_", "graph_",
+                "scan_python_datasource", "sink_python_datasource",
+            ),
+            id="_EXPENSIVE",
+        ),
+        pytest.param(registry._PRIORITY, None, id="_PRIORITY"),
+        pytest.param(audit.SKIP, None, id="SKIP"),
+        pytest.param(audit.NLJ_OK, None, id="NLJ_OK"),
+        pytest.param(audit.PYTHON_OK, None, id="PYTHON_OK"),
+        pytest.param(audit.NONDETERMINISTIC_OK, None, id="NONDETERMINISTIC_OK"),
+    ],
+)
+def test_hand_kept_key_set_names_registered_keys(keys, families):
+    """Every hand-kept key set annotates registered keys: a rename or
+    removal goes red here instead of silently exempting, prioritizing
+    or skipping nothing while the real key drifts (a misspelled
+    ``_PRIORITY`` key would lead nothing; a stale ``_EXPENSIVE`` entry
+    lets the real key drift back into the cheap tier, r10 verdict
+    item 6). Sets limited to some key families must stay inside them."""
+    unknown = set(keys) - set(registry.queries())
+    assert not unknown, f"unregistered keys: {unknown}"
+    if families:
+        stray = [k for k in keys if not k.startswith(families)]
+        assert not stray, f"undocumented family, document why at the constant: {stray}"
 
 
 def test_recall_artifact_covers_exactly_the_rows_only_keys():
