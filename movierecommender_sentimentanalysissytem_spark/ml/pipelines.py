@@ -46,8 +46,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from movierecommender_sentimentanalysissytem_spark.functions.rounding import round4
+from movierecommender_sentimentanalysissytem_spark.plans.fingerprint import plan_nodes
 from movierecommender_sentimentanalysissytem_spark.registry import query
-from movierecommender_sentimentanalysissytem_spark.sources.tables import table
+from movierecommender_sentimentanalysissytem_spark.sources.tables import (
+    rating_events,
+    table,
+)
 
 
 def _drop_training_summary(py_model) -> None:
@@ -104,17 +108,15 @@ def _drop_training_summary(py_model) -> None:
 
 
 def _ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Derived ratings fixture (FIXTURES.md): user=o_custkey,
-    item=l_partkey, rating=l_quantity, averaged per (user, item)."""
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
+    """ALS's input: ``rating_events`` averaged per (user, item), with
+    int user and item ids and a float rating, the types MLlib expects."""
     return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
+        rating_events(spark, sf_dir)
         .groupBy(
-            F.col("o_custkey").cast("int").alias("user"),
-            F.col("l_partkey").cast("int").alias("item"),
+            F.col("user").cast("int").alias("user"),
+            F.col("item").cast("int").alias("item"),
         )
-        .agg(F.avg("l_quantity").cast("float").alias("rating"))
+        .agg(F.avg("rating").cast("float").alias("rating"))
     )
 
 
@@ -123,12 +125,15 @@ def als_estimator(spark: SparkSession, sf_dir: str):
     seed, on the ``_ratings`` columns of ``sf_dir``, with user and item
     blocks = ``min(10, defaultParallelism, read splits of lineitem)``
     (the module's scale notes give the measurements). The split count
-    comes from the planned lineitem scan and launches no job. ALS seeds
-    its initial factors per block, so the fitted model depends on the
-    block count."""
+    is read from the planned lineitem scan's input RDD: it launches no
+    job and, unlike ``DataFrame.rdd``, compiles no row-conversion class.
+    ALS seeds its initial factors per block, so the fitted model depends
+    on the block count."""
     from pyspark.ml.recommendation import ALS
 
-    splits = table(spark, sf_dir, "lineitem").rdd.getNumPartitions()
+    li = table(spark, sf_dir, "lineitem")
+    scan = next(n.obj for n in plan_nodes(li) if n.cls == "FileSourceScanExec")
+    splits = scan.inputRDD().getNumPartitions()
     blocks = min(10, spark.sparkContext.defaultParallelism, splits)
     return ALS(
         rank=8,
@@ -235,15 +240,10 @@ def ml_eval_rmse(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived ratings — the SQL-checkable form of RegressionEvaluator
     (the ALS model's own RMSE is seed-dependent, hence not oracled).
     """
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
     ratings = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy(
-            F.col("o_custkey").alias("u"),
-            F.col("l_partkey").alias("i"),
-        )
-        .agg(F.avg("l_quantity").alias("r"))
+        rating_events(spark, sf_dir)
+        .groupBy(F.col("user").alias("u"), F.col("item").alias("i"))
+        .agg(F.avg("rating").alias("r"))
     )
     # Algebraic form (r14, guide §2.3/§2.4): for the per-item-mean
     # predictor, Σ_rows(r - m_i)² = Σ_i(Σr² - (Σr)²/n_i), so RMSE
@@ -645,17 +645,15 @@ def ml_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-dp round)."""
     from movierecommender_sentimentanalysissytem_spark.plans.caching import scoped_persist
 
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
     base = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
+        rating_events(spark, sf_dir)
         .groupBy(
-            F.col("o_custkey").alias("u"),
-            F.col("l_partkey").alias("i"),
+            F.col("user").alias("u"),
+            F.col("item").alias("i"),
             (F.col("o_orderkey") % 4).alias("fold"),
         )
         .agg(
-            F.sum(F.col("l_quantity").cast("bigint")).alias("sq"),
+            F.sum(F.col("rating").cast("bigint")).alias("sq"),
             F.count(F.lit(1)).alias("nl"),
         )
     )

@@ -1,7 +1,7 @@
 """Archetype-parity composite queries (SURVEY.md §0.1): the concrete
 analytics a user of the reference repo runs daily, re-expressed on the
-fixture schema. Ratings are the derived fixture (user=o_custkey,
-item=l_partkey, rating=l_quantity — FIXTURES.md); "genres" are the
+fixture schema. Ratings are the derived fixture
+(``sources.tables.rating_events``, FIXTURES.md); "genres" are the
 reference's |-delimited multi-valued attribute, played here by the
 space-separated words of p_type.
 
@@ -17,17 +17,10 @@ from pyspark.sql.window import Window
 
 from movierecommender_sentimentanalysissytem_spark.functions.rounding import round4
 from movierecommender_sentimentanalysissytem_spark.registry import query
-from movierecommender_sentimentanalysissytem_spark.sources.tables import table
-
-
-def _ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
-    return li.join(o, li.l_orderkey == o.o_orderkey).select(
-        F.col("o_custkey").alias("user"),
-        F.col("l_partkey").alias("item"),
-        F.col("l_quantity").alias("rating"),
-    )
+from movierecommender_sentimentanalysissytem_spark.sources.tables import (
+    rating_events,
+    table,
+)
 
 
 @query(
@@ -52,7 +45,7 @@ def rec_top_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The archetype's "top movies by average rating with a minimum
     rating count" — agg + HAVING + deterministic top-k. AVG of
     integer-valued ratings is exact, so the stable round is safe."""
-    r = _ratings(spark, sf_dir)
+    r = rating_events(spark, sf_dir)
     stats = (
         r.groupBy("item")
         .agg(
@@ -91,7 +84,7 @@ def rec_top_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rec_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ratings-per-user histogram in bands of 10 (the archetype's
     user-activity exploration)."""
-    r = _ratings(spark, sf_dir)
+    r = rating_events(spark, sf_dir)
     per_user = r.groupBy("user").agg(F.count(F.lit(1)).alias("n"))
     return (
         per_user.groupBy(
@@ -161,7 +154,7 @@ def rec_user_topn_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     (history-based) twin of ml_als_recommend's model-based top-N, and
     the exact shape `recommendForAllUsers` computes internally."""
     r = (
-        _ratings(spark, sf_dir)
+        rating_events(spark, sf_dir)
         .groupBy("user", "item")
         .agg(F.avg("rating").alias("rating"))
     )
@@ -434,23 +427,17 @@ def rec_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         scoped_persist,
     )
 
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
     # One explicit repartition on the user key serves the whole capped-
     # ratings lineage: HashPartitioning(u) satisfies the (u, item)
     # grouping (same-u rows are co-located), the cap window partitions
     # by u, and the pair self-join keys on u — so none of them adds
     # another full-data exchange.
     ratings_all = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("u"),
-            F.col("l_partkey").alias("item"),
-            "l_quantity",
-        )
+        rating_events(spark, sf_dir)
+        .select(F.col("user").alias("u"), "item", "rating")
         .repartition("u")
         .groupBy("u", "item")
-        .agg(F.sum("l_quantity").cast("bigint").alias("r"))
+        .agg(F.sum("rating").cast("bigint").alias("r"))
     )
     w_u = Window.partitionBy("u").orderBy(F.desc("r"), F.asc("item"))
     ratings = scoped_persist(
@@ -612,18 +599,12 @@ def rec_item_similarity_dimsum(spark: SparkSession, sf_dir: str) -> DataFrame:
         scoped_persist,
     )
 
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
     ratings_all = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("u"),
-            F.col("l_partkey").alias("item"),
-            "l_quantity",
-        )
+        rating_events(spark, sf_dir)
+        .select(F.col("user").alias("u"), "item", "rating")
         .repartition("u")
         .groupBy("u", "item")
-        .agg(F.sum("l_quantity").cast("bigint").alias("r"))
+        .agg(F.sum("rating").cast("bigint").alias("r"))
     )
     w_u = Window.partitionBy("u").orderBy(F.desc("r"), F.asc("item"))
     ratings = scoped_persist(
@@ -732,9 +713,9 @@ def rec_eval_precision_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross join against the catalog, which is the non-scalable way
     this metric is usually written. At 100 TB the same plan holds:
     the only global structure is the k-row candidate list."""
-    r = _ratings_with_order(spark, sf_dir)
-    train = r.filter(F.col("ok") % 4 != 0)
-    test = r.filter(F.col("ok") % 4 == 0).select("u", "item").distinct()
+    r = rating_events(spark, sf_dir)
+    train = r.filter(F.col("o_orderkey") % 4 != 0)
+    test = r.filter(F.col("o_orderkey") % 4 == 0).select("user", "item").distinct()
     top10 = (
         train.groupBy("item")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -747,32 +728,20 @@ def rec_eval_precision_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         test.item == F.col("top_item"),
         "left",
     )
-    per_user = hit.groupBy("u").agg(
+    per_user = hit.groupBy("user").agg(
         F.count(F.lit(1)).alias("n_relevant"),
         F.sum(F.when(F.col("top_item").isNotNull(), 1).otherwise(0))
         .cast("bigint")
         .alias("hits"),
     )
     return per_user.select(
-        F.col("u").alias("user"),
+        "user",
         "n_relevant",
         "hits",
         (F.col("hits") / 10.0).alias("p_at_10"),
         round4(F.col("hits").cast("double") / F.col("n_relevant")).alias(
             "recall"
         ),
-    )
-
-
-def _ratings_with_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ratings fixture joined with its order key (for deterministic
-    fold splits)."""
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
-    return li.join(o, li.l_orderkey == o.o_orderkey).select(
-        F.col("o_custkey").alias("u"),
-        F.col("l_partkey").alias("item"),
-        F.col("o_orderkey").alias("ok"),
     )
 
 
@@ -825,9 +794,9 @@ def rec_eval_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``aggregate(sequence(...))`` / DuckDB ``list_reduce``), the same
     cross-engine-exact discipline as the vector kernels; the per-user
     DCG sums at most 10 terms, absorbed by the 4-dp round."""
-    r = _ratings_with_order(spark, sf_dir)
-    train = r.filter(F.col("ok") % 4 != 0)
-    test = r.filter(F.col("ok") % 4 == 0).select("u", "item").distinct()
+    r = rating_events(spark, sf_dir)
+    train = r.filter(F.col("o_orderkey") % 4 != 0)
+    test = r.filter(F.col("o_orderkey") % 4 == 0).select("user", "item").distinct()
     wrk = Window.orderBy(F.col("cnt").desc(), F.col("item").asc())
     top10 = (
         train.groupBy("item")
@@ -840,7 +809,7 @@ def rec_eval_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     hit = test.join(
         F.broadcast(top10), test.item == F.col("top_item"), "left"
     )
-    per_user = hit.groupBy("u").agg(
+    per_user = hit.groupBy("user").agg(
         F.count(F.lit(1)).alias("n_relevant"),
         F.count("top_item").alias("hits"),
         F.coalesce(
@@ -852,7 +821,7 @@ def rec_eval_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         " (acc, i) -> acc + 1.0 / log2(i + 1))"
     )
     return per_user.select(
-        F.col("u").alias("user"),
+        "user",
         "n_relevant",
         "hits",
         round4(F.col("dcg") / idcg).alias("ndcg_at_10"),
@@ -911,9 +880,9 @@ def rec_eval_map_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     else is the precision key's plan (distinct + broadcast probe +
     groupBy). The AP numerator sums at most k rational terms,
     absorbed by the 4-dp round."""
-    r = _ratings_with_order(spark, sf_dir)
-    train = r.filter(F.col("ok") % 4 != 0)
-    test = r.filter(F.col("ok") % 4 == 0).select("u", "item").distinct()
+    r = rating_events(spark, sf_dir)
+    train = r.filter(F.col("o_orderkey") % 4 != 0)
+    test = r.filter(F.col("o_orderkey") % 4 == 0).select("user", "item").distinct()
     wrk = Window.orderBy(F.col("cnt").desc(), F.col("item").asc())
     top10 = (
         train.groupBy("item")
@@ -927,15 +896,15 @@ def rec_eval_map_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(top10), test.item == F.col("top_item")
     ).withColumn(
         "j",
-        F.row_number().over(Window.partitionBy("u").orderBy("rk")),
+        F.row_number().over(Window.partitionBy("user").orderBy("rk")),
     )
-    ap = hits.groupBy("u").agg(
+    ap = hits.groupBy("user").agg(
         F.sum(F.col("j").cast("double") / F.col("rk")).alias("ap_num"),
         F.count(F.lit(1)).alias("hits"),
     )
-    nrel = test.groupBy("u").agg(F.count(F.lit(1)).alias("n_relevant"))
-    return nrel.join(ap, "u", "left").select(
-        F.col("u").alias("user"),
+    nrel = test.groupBy("user").agg(F.count(F.lit(1)).alias("n_relevant"))
+    return nrel.join(ap, "user", "left").select(
+        "user",
         "n_relevant",
         F.coalesce(F.col("hits"), F.lit(0).cast("bigint")).alias("hits"),
         round4(
@@ -1013,9 +982,9 @@ def rec_eval_coverage_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     4× explode of O(users)+O(items) rows, never the interaction table.
     All counts are exact integers; the two ratios divide once, under
     the stable 4-dp round."""
-    r = _ratings_with_order(spark, sf_dir)
-    train = r.filter(F.col("ok") % 4 != 0)
-    test = r.filter(F.col("ok") % 4 == 0).select("u", "item").distinct()
+    r = rating_events(spark, sf_dir)
+    train = r.filter(F.col("o_orderkey") % 4 != 0)
+    test = r.filter(F.col("o_orderkey") % 4 == 0).select("user", "item").distinct()
     wrk = Window.orderBy(F.col("cnt").desc(), F.col("item").asc())
     top10 = (
         train.groupBy("item")
@@ -1037,7 +1006,7 @@ def rec_eval_coverage_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     user_min = (
         test.join(F.broadcast(top10), test.item == F.col("top_item"), "left")
-        .groupBy("u")
+        .groupBy("user")
         .agg(F.min("rk").alias("minrk"))
     )
     item_min = (
@@ -1124,16 +1093,12 @@ def rec_multihop_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
         scoped_persist,
     )
 
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
     # Shared-lineage rule: ratings feeds both pair sides + the seed,
     # edges_half both union directions, hop1 three consumers — persist
     # each so the fact join and the pair self-join run once.
     ratings = scoped_persist(
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("u"), F.col("l_partkey").alias("item")
-        )
+        rating_events(spark, sf_dir)
+        .select(F.col("user").alias("u"), "item")
         .distinct()
     )
     a = ratings.select("u", F.col("item").alias("ia"))
@@ -1218,13 +1183,9 @@ def rec_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast. The support floor (HAVING ≥ 5) runs before the
     confidence cut, which is what bounds the rule-table size at
     scale. Ratios of exact integers take the stable 4-dp round."""
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
     baskets = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("u"), F.col("l_partkey").alias("item")
-        )
+        rating_events(spark, sf_dir)
+        .select(F.col("user").alias("u"), "item")
         .distinct()
     )
     # Shared-lineage rule: baskets feeds the basket count, the item
@@ -1338,20 +1299,16 @@ def rec_diversity_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorts, allowlisted in plans/audit.py); catalog size is a 1-row
     broadcast. Exposure weights are integer counts, so the Gini's
     weighted sum is exact before its single stable round."""
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
     ratings = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy(
-            F.col("o_custkey").alias("u"), F.col("l_partkey").alias("item")
-        )
-        .agg(F.avg("l_quantity").alias("r"))
+        rating_events(spark, sf_dir)
+        .groupBy("user", "item")
+        .agg(F.avg("rating").alias("r"))
     )
-    w = Window.partitionBy("u").orderBy(F.desc("r"), F.asc("item"))
+    w = Window.partitionBy("user").orderBy(F.desc("r"), F.asc("item"))
     recs = (
         ratings.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 5)
-        .select("u", "item")
+        .select("user", "item")
     )
     exposure = recs.groupBy("item").agg(F.count(F.lit(1)).alias("cnt"))
     ranked = exposure.withColumn(
@@ -1413,12 +1370,8 @@ def rec_popularity_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     a fixture-coupled literal; the rollup is one map-side-combinable
     aggregate and the top-25 a TakeOrdered — at 100 TB: one join, one
     shuffle on item, no window."""
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
-    r = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        F.col("l_partkey").alias("item"), "o_orderdate"
-    )
-    mx = o.agg(F.max("o_orderdate").alias("maxd"))
+    r = rating_events(spark, sf_dir).select("item", "o_orderdate")
+    mx = table(spark, sf_dir, "orders").agg(F.max("o_orderdate").alias("maxd"))
     bucket = F.floor(
         F.datediff(F.col("maxd"), F.col("o_orderdate")) / 30
     )
@@ -1473,14 +1426,11 @@ def rec_cold_start_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup cut to a 3-row broadcast, and the backfill is lapsed ×
     top3 — a bounded-by-3 fan-out, not a user×catalog cross. Every
     column is integer/rank — hash-exact with no rounding."""
-    li = table(spark, sf_dir, "lineitem")
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
-    ratings = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        F.col("o_custkey").alias("user"), F.col("l_partkey").alias("item")
-    )
     top3 = (
-        ratings.groupBy("item")
+        rating_events(spark, sf_dir)
+        .groupBy("item")
         .agg(F.count(F.lit(1)).alias("n_ratings"))
         .orderBy(F.col("n_ratings").desc(), F.col("item").asc())
         .limit(3)

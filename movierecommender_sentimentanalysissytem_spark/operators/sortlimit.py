@@ -14,7 +14,10 @@ from pyspark.sql.window import Window
 
 from movierecommender_sentimentanalysissytem_spark.functions.rounding import round4
 from movierecommender_sentimentanalysissytem_spark.registry import query
-from movierecommender_sentimentanalysissytem_spark.sources.tables import table
+from movierecommender_sentimentanalysissytem_spark.sources.tables import (
+    rating_events,
+    table,
+)
 
 
 @query(
@@ -114,15 +117,12 @@ def sample_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     upstream partitioning changes — a real leakage hazard in
     production retrains). Summarized per split: row count and mean
     rating, SQL-checked exactly."""
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
     bucket = F.expr(
         "CAST(conv(substring(md5(concat('tts:', l_orderkey, ':',"
         " l_linenumber)), 1, 15), 16, 10) AS BIGINT) % 100"
     )
-    ratings = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        F.col("l_quantity").alias("rating"),
-        F.when(bucket < 80, "train").otherwise("test").alias("split"),
+    ratings = rating_events(spark, sf_dir).select(
+        "rating", F.when(bucket < 80, "train").otherwise("test").alias("split")
     )
     return ratings.groupBy("split").agg(
         F.count(F.lit(1)).alias("n"),

@@ -122,6 +122,22 @@ _PRIORITY: dict[str, int] = {
     "dedup_ngram_containment": 15,
     "dedup_clusters": 15,
     "rec_item_similarity_dimsum": 15,
+    "rec_top_items": 15,
+    "rec_user_activity": 15,
+    "rec_user_topn_window": 15,
+    "rec_eval_precision_at_k": 15,
+    "rec_eval_ndcg_at_k": 15,
+    "rec_eval_map_at_k": 15,
+    "rec_eval_coverage_at_k": 15,
+    "rec_item_similarity": 15,
+    "rec_multihop_expansion": 15,
+    "rec_association_rules": 15,
+    "rec_diversity_coverage": 15,
+    "rec_popularity_time_decay": 15,
+    "rec_cold_start_backfill": 15,
+    "ml_eval_rmse": 15,
+    "ml_learning_curve": 15,
+    "sample_train_test_split": 15,
 }
 
 # SURVEY.md §2 inventory — the judge's coverage checklist. These outrank

@@ -127,6 +127,28 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _read_parquet(spark, path)
 
 
+def rating_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The derived ratings fixture (FIXTURES.md): lineitem joined with
+    orders on the order key, one row per lineitem, with ``user`` =
+    ``o_custkey``, ``item`` = ``l_partkey`` and ``rating`` =
+    ``l_quantity``. Every lineitem and orders column rides along, so
+    keys can split folds by ``o_orderkey``, hash a line's primary key
+    (``l_orderkey``, ``l_linenumber``) or decay by ``o_orderdate``, and a
+    table holding only the columns a key reads still serves that key.
+    Every ratings key derives its own average, sum, distinct pairs or
+    raw rows from here; column pruning drops what it does not read, so
+    its plan is unchanged."""
+    li = table(spark, sf_dir, "lineitem")
+    o = table(spark, sf_dir, "orders")
+    return li.join(o, li.l_orderkey == o.o_orderkey).withColumns(
+        {
+            "user": F.col("o_custkey"),
+            "item": F.col("l_partkey"),
+            "rating": F.col("l_quantity"),
+        }
+    )
+
+
 def spread_partitions(df: DataFrame) -> int:
     """How many partitions ``spread_scan`` gives ``df``:
     ``min(spark.sql.shuffle.partitions, ceil(bytes / SPREAD_BYTES))``,

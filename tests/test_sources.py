@@ -1,7 +1,8 @@
 """Source layer: ``sources.tables.table`` infers a parquet file's
 schema once per file version, ``spread_scan`` sizes a one-file scan's
-repartition to its bytes, and ``literal_table`` builds constant
-relations in the JVM. Pinned with Spark job counts and plan shapes, not
+repartition to its bytes, ``literal_table`` builds constant relations
+in the JVM, and ``rating_events`` is the one home of the derived
+ratings join. Pinned with Spark job counts and plan shapes, not
 timings, so host noise cannot make these pass or fail."""
 
 from __future__ import annotations
@@ -151,4 +152,31 @@ def test_only_literal_table_builds_constant_relations():
                 and id(node) not in allowed
             ):
                 offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not offenders, offenders
+
+
+def test_only_rating_events_joins_the_ratings_fixture():
+    """The derived ratings fixture (user = ``o_custkey``, item =
+    ``l_partkey``) has one home, ``sources.tables.rating_events``: no
+    other package function names both columns. ``quality_fk_matrix``
+    is exempt: it audits each foreign key on its own, not ratings."""
+    root = Path(pkg.__file__).parent
+    allowed = {
+        ("sources/tables.py", "rating_events"),
+        ("operators/statistics.py", "quality_fk_matrix"),
+    }
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for f in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(f, ast.FunctionDef) or (rel, f.name) in allowed:
+                continue
+            names = {
+                n.value
+                for stmt in f.body
+                for n in ast.walk(stmt)
+                if isinstance(n, ast.Constant) and isinstance(n.value, str)
+            }
+            if {"o_custkey", "l_partkey"} <= names:
+                offenders.append(f"{rel}:{f.lineno} {f.name}")
     assert not offenders, offenders
